@@ -14,12 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int = 16, out_col: str = "__salt",
-              seed: int = 42) -> DataFrame:
-    """Uniform salt column in [0, n_salts) — deterministic per run."""
-    return df.withColumn(out_col, (F.rand(seed) * n_salts).cast("int"))
-
-
 def salted_count_distinct(
     df: DataFrame, key_cols: list[str], value_col: str, n_salts: int = 16
 ) -> DataFrame:

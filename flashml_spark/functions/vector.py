@@ -65,7 +65,3 @@ def l2_distance(a: Column, b: Column) -> Column:
         )
     )
 
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(a, lambda v: v / n)

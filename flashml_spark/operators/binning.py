@@ -47,10 +47,6 @@ def equidistant_splits(df: DataFrame, col: str, n: int) -> list[float]:
     return [mn + i * width for i in range(1, n)]
 
 
-def bin_equidistant(df: DataFrame, col: str, n: int, out_col: str | None = None) -> DataFrame:
-    return bin_intervals(df, col, equidistant_splits(df, col, n), out_col)
-
-
 def exact_quantile_splits(df: DataFrame, col: str, n: int) -> list[float]:
     """Exact linear-interpolated quantile split points, bit-identical to
     SQL ``percentile`` (same interpolation as ANSI ``percentile_cont``).

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flashml_spark.functions import hashing as H
+from flashml_spark.functions.pins import unpin
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -317,23 +318,6 @@ def connected_components(
     a round changes nothing.  Output: ``id, component`` (component = min
     id in the group).
     """
-    sc = pairs.sparkSession.sparkContext
-
-    def _persistent_ids() -> set[int]:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    def _free(ids: set[int]) -> None:
-        # Drop abandoned localCheckpoint blocks: Spark only reclaims them
-        # after driver-side GC of the RDD object, so an iterative loop
-        # otherwise pins every round's labels in executor storage memory
-        # for the lifetime of the session (at 100 TB that is the storage
-        # pool; in a shared-JVM bench it is mounting GC pressure).
-        m = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            r = m.get(rid)
-            if r is not None:
-                r.unpersist(False)
-
     # Symmetrize with ONE explode pass, not union(edges, swapped): the
     # union plan carries the (often expensive) upstream pair-join subtree
     # TWICE — both branches re-execute it inside the same materializing
@@ -375,19 +359,15 @@ def connected_components(
         finally:
             sym0.unpersist()
     n_parts = max(1, int(n_edges / 500_000) + 1)
-    ids0 = _persistent_ids()
     sym = sym0.repartition(n_parts, "dst").localCheckpoint()
-    sym_ids = _persistent_ids() - ids0
     sym0.unpersist()
     # localCheckpoint each round: iterative joins otherwise nest the plan
     # exponentially (planner OOM long before data size matters).  Keeping
     # sym/labels hash-partitioned on their join keys lets each round's
     # sort-merge path reuse the layout (LogicalRDD preserves partitioning).
-    ids0 = _persistent_ids()
-    labels = (
+    pinned = labels = (
         sym.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     ).repartition(n_parts, "id").localCheckpoint()
-    prev_ids = _persistent_ids() - ids0
 
     converged = False
     for _ in range(max_iterations):
@@ -405,7 +385,6 @@ def connected_components(
         # current label is one join away — shortcut through it (checkpointed
         # previous round, so the extra join does not grow lineage)
         hop = labels.select(F.col("id").alias("mid"), F.col("component").alias("cc2"))
-        ids0 = _persistent_ids()
         new_labels = (
             prop.join(hop, "mid", "left")
             .select(
@@ -416,14 +395,13 @@ def connected_components(
             .repartition(n_parts, "id")
             .localCheckpoint()
         )
-        new_ids = _persistent_ids() - ids0
         changed = (
             new_labels.filter(F.col("component") != F.col("old")).limit(1).count()
         )
         # the eager checkpoint above fully materialized new_labels, so the
         # previous round's blocks can never be read again — free them now
-        _free(prev_ids)
-        prev_ids = new_ids
+        unpin(pinned)
+        pinned = new_labels
         labels = new_labels.select("id", "component")
         if changed == 0:
             converged = True
@@ -436,7 +414,7 @@ def connected_components(
             f"connected_components did not converge within {max_iterations} "
             "iterations (graph diameter exceeds the cap); raise max_iterations"
         )
-    _free(sym_ids)
+    unpin(sym)
     return labels
 
 

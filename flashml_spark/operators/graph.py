@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flashml_spark.functions.pins import unpin
+
 
 def pagerank(
     edges: DataFrame,
@@ -40,27 +42,15 @@ def pagerank(
     and documented for directed use.  Fixed iteration count keeps the
     result deterministic and oracle-checkable (unrolled-CTE SQL twin).
 
-    Returns ``(node, <out_col>)``.
+    Returns ``(node, <out_col>)``.  The result reads one pin that the
+    caller owns: the last round's ranks, or the node frame when
+    ``iterations == 0``.
     """
-    sc = edges.sparkSession.sparkContext
-
-    def _persistent_ids() -> set[int]:
-        m = sc._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        m = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            r = m.get(rid)
-            if r is not None:
-                r.unpersist(False)
-
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # the node frame is consumed by EVERY iteration's rebase join (plus
     # the count and the initial ranks): pin it once, or the upstream
     # edge-construction subtree re-executes per round (r12; the lazy
     # checkpoint materializes on the count below — no extra action).
-    before = _persistent_ids()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -75,13 +65,11 @@ def pagerank(
         .repartition("src")
         .localCheckpoint()
     )
-    pinned_ids = _persistent_ids() - before
 
     n_nodes = nodes.count()
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
-    prev_ids: set[int] = set()
-    for _ in range(iterations):
+    for i in range(iterations):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
             .select(F.col("dst").alias("node"), (F.col("r") / F.col("__deg")).alias("c"))
@@ -94,19 +82,17 @@ def pagerank(
                 "node",
                 (F.lit(base) + damping * F.coalesce("__in", F.lit(0.0))).alias("r"),
             )
+            .localCheckpoint()
         )
-        before = _persistent_ids()
-        ranks = new_ranks.localCheckpoint()
-        new_ids = _persistent_ids() - before
-        _free(prev_ids)
-        prev_ids = new_ids
-    out = ranks.select("node", F.col("r").alias(out_col))
+        if i > 0:
+            unpin(ranks)
+        ranks = new_ranks
+    # the result never reads the edge pin, and reads the node pin only
+    # when no iteration ran
+    unpin(ed)
     if iterations > 0:
-        # the final ranks checkpoint no longer depends on the edge/node
-        # pins; with NO iterations `out` still reads the node pin, so
-        # keep it (the bench frees leftovers between queries anyway)
-        _free(pinned_ids)
-    return out
+        unpin(nodes)
+    return ranks.select("node", F.col("r").alias(out_col))
 
 
 def bfs_hops(
@@ -141,7 +127,7 @@ def bfs_hops(
         try:
             return _bfs_driver(e0c, sources, max_hops, node_col)
         finally:
-            e0c.unpersist()
+            unpin(e0c)
     sym = (
         e0c.select(
             F.explode(
@@ -651,25 +637,10 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"kcore requires k >= 1, got {k}")
-    sc = edges.sparkSession.sparkContext
-
-    def _persistent_ids() -> set[int]:
-        m = sc._jsc.getPersistentRDDs()
-        return {int(i) for i in m.keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        m = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            r = m.get(rid)
-            if r is not None:
-                r.unpersist(False)
-
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col(src) != F.col(dst)
     )
-    ids0 = _persistent_ids()
     e0c = e0.localCheckpoint()
-    e0_ids = _persistent_ids() - ids0
     n_edges = e0c.count()
     if n_edges <= driver_edge_budget:
         # ≤ budget rows of two bigints ≈ 80 MB at the 5M default — a
@@ -679,11 +650,10 @@ def kcore(
         try:
             return _kcore_driver(e0c, k, max_iterations)
         finally:
-            _free(e0_ids)
+            unpin(e0c)
     # Symmetrize ONCE (one row per direction) and keep the frame STATIC:
     # delta peeling reads it with a semi-join filter each round but only
     # rewrites it at the periodic compaction points below.
-    ids0 = _persistent_ids()
     sym = (
         e0c.select(
             F.explode(
@@ -696,18 +666,15 @@ def kcore(
         .select("__e.u", "__e.v")
         .localCheckpoint()
     )
-    sym_ids = _persistent_ids() - ids0
     # ONE full degree aggregation, ever; every later round only applies
     # decrements.  |V|-row frame, checkpointed so the convergence check,
     # the removal filter and the join-update reuse the same blocks.
-    ids0 = _persistent_ids()
     deg = (
         sym.groupBy(F.col("u").alias("node"))
         .agg(F.count(F.lit(1)).alias("d"))
         .localCheckpoint()
     )
-    deg_ids = _persistent_ids() - ids0
-    _free(e0_ids)
+    unpin(e0c)
 
     # |V| longs broadcast comfortably far beyond this; above it the
     # removed-set semi-join falls back to a shuffle (still correct).
@@ -748,7 +715,6 @@ def kcore(
             .groupBy(F.col("v").alias("node"))
             .agg(F.count(F.lit(1)).alias("__dec"))
         )
-        ids0 = _persistent_ids()
         new_deg = (
             alive.join(decs, "node", "left")
             .select(
@@ -757,9 +723,7 @@ def kcore(
             )
             .localCheckpoint()
         )
-        new_ids = _persistent_ids() - ids0
-        _free(deg_ids)
-        deg_ids = new_ids
+        unpin(deg)
         deg = new_deg
         if rounds % COMPACT_EVERY == 0:
             # deep peel: drop edges of long-dead vertices so the
@@ -767,15 +731,13 @@ def kcore(
             alive_nodes = deg.select("node")
             if v_small:
                 alive_nodes = F.broadcast(alive_nodes)
-            ids0 = _persistent_ids()
-            sym = (
+            new_sym = (
                 sym.join(alive_nodes.withColumnRenamed("node", "u"), "u", "left_semi")
                 .join(alive_nodes.withColumnRenamed("node", "v"), "v", "left_semi")
                 .localCheckpoint()
             )
-            new_sym_ids = _persistent_ids() - ids0
-            _free(sym_ids)
-            sym_ids = new_sym_ids
+            unpin(sym)
+            sym = new_sym
     if not converged:
         raise RuntimeError(
             f"kcore(k={k}) did not converge within {max_iterations} "
@@ -786,6 +748,5 @@ def kcore(
     out = deg.select("node", F.col("d").cast("bigint").alias("core_degree"))
     # materialize BEFORE freeing the final round's blocks
     result = out.localCheckpoint()
-    _free(deg_ids)
-    _free(sym_ids)
+    unpin(deg, sym)
     return result

@@ -22,7 +22,7 @@ installed (as here; that test import-skips).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -152,14 +152,6 @@ def decode_media(df: DataFrame, fake: bool = True, batch_hint: int | None = None
             )
 
     return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling STUB: emits the (media_id, frame_idx) work plan
-    a real decoder would execute — ``sequence``-generated, no Python."""
-    # byte_len / 1000 as a fake frame count — real impl reads container metadata
-    frames = F.sequence(F.lit(0), F.floor(F.length("payload") / 1000), F.lit(every_n))
-    return df.select("media_id", F.explode(frames).alias("frame_idx"))
 
 
 THUMB_SCHEMA = StructType(
@@ -458,14 +450,49 @@ def scene_cuts(
     return df.mapInPandas(run, schema=SCENE_SCHEMA)
 
 
-PNG_AUDIT_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("phash", StringType()),
-    ]
-)
+def _roundtrip_audit(
+    df: DataFrame,
+    id_col: str,
+    schema: str,
+    build_row: Callable[[int], tuple],
+) -> DataFrame:
+    """The chain every codec audit shares: ``(media_id, *build_row(id))``
+    for each id in ``df[id_col]``, ordered by ``media_id``.  ``schema``
+    is the DDL of the columns ``build_row`` returns.
+
+    Scale shape: pure map (one Arrow-batched pass, no shuffle) with
+    bounded per-row work, then one global sort of the narrow result.
+    """
+    schema = f"media_id long, {schema}"
+    names = StructType.fromDDL(schema).names
+
+    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(i, *build_row(i)) for i in map(int, pdf[id_col])],
+                columns=names,
+            )
+
+    # pin the tiny audit rows BEFORE the global sort: orderBy range-
+    # partitions via a sampling pass that RE-EXECUTES its child, so the
+    # per-row codec work otherwise runs twice per action (r12; measured
+    # 2 full Python stages per action).  The pin is lazy: building the
+    # frame runs no codec work, and the first action's sampling pass
+    # fills it.  (If `df` itself ends in a shuffle, AQE still runs that
+    # shuffle's map stage at build to plan the pin.)  The pinned frame
+    # is a few narrow columns per id - output-sized,
+    # never payload-sized.
+    return (
+        df.select(id_col)
+        .mapInPandas(run, schema=schema)
+        .localCheckpoint(eager=False)
+        .orderBy("media_id")
+    )
+
+
+_HASH_AUDIT_SCHEMA = "width int, height int, phash string"
 
 
 def png_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -489,43 +516,19 @@ def png_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, int, str]:
+        w = 8 + i % 9
+        h = 4 + 2 * (i % 3)
+        top = ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)
+        bot = ((i * 41 + 7) % 256, (i * 61 + 13) % 256, (i * 89 + 29) % 256)
+        rows = [[top] * w for _ in range(h // 2)] + [
+            [bot] * w for _ in range(h // 2)
+        ]
+        payload = codecs.encode_png(rows, filter_type=i % 5)
+        width, height, px = codecs.decode_png(payload)
+        return width, height, codecs.average_hash(codecs.png_grayscale(px))
 
-        def build_and_decode(i: int) -> tuple[int, int, str]:
-            w = 8 + i % 9
-            h = 4 + 2 * (i % 3)
-            top = ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)
-            bot = ((i * 41 + 7) % 256, (i * 61 + 13) % 256, (i * 89 + 29) % 256)
-            rows = [[top] * w for _ in range(h // 2)] + [
-                [bot] * w for _ in range(h // 2)
-            ]
-            payload = codecs.encode_png(rows, filter_type=i % 5)
-            width, height, px = codecs.decode_png(payload)
-            return width, height, codecs.average_hash(codecs.png_grayscale(px))
-
-        for pdf in batches:
-            decoded = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "phash": [d[2] for d in decoded],
-                }
-            )
-
-    # pin the tiny audit rows BEFORE the global sort: orderBy range-
-    # partitions via a sampling pass that RE-EXECUTES its child, so the
-    # per-row codec work otherwise runs twice end-to-end (r12; measured
-    # 2 full 32-task Python stages per action).  The pinned frame is
-    # 4 narrow columns per doc - output-sized, never payload-sized.
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=PNG_AUDIT_SCHEMA)
-        .localCheckpoint()
-        .orderBy("media_id")
-    )
+    return _roundtrip_audit(df, id_col, _HASH_AUDIT_SCHEMA, build_and_decode)
 
 
 def jpeg_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -553,50 +556,26 @@ def jpeg_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, int, str]:
+        w = 8 + i % 9
+        h = 4 + 2 * (i % 3)
+        dark = ((i * 23) % 64, (i * 29) % 64, (i * 31) % 64)
+        bright = (
+            192 + (i * 37) % 64,
+            192 + (i * 41) % 64,
+            192 + (i * 43) % 64,
+        )
+        top, bot = (dark, bright) if (i % 4) < 2 else (bright, dark)
+        rows = [[top] * w for _ in range(h // 2)] + [
+            [bot] * w for _ in range(h // 2)
+        ]
+        payload = codecs.encode_jpeg(
+            rows, quality=90, subsample="420" if i % 2 == 0 else "444"
+        )
+        width, height, px = codecs.decode_jpeg(payload)
+        return width, height, codecs.average_hash(codecs.png_grayscale(px))
 
-        def build_and_decode(i: int) -> tuple[int, int, str]:
-            w = 8 + i % 9
-            h = 4 + 2 * (i % 3)
-            dark = ((i * 23) % 64, (i * 29) % 64, (i * 31) % 64)
-            bright = (
-                192 + (i * 37) % 64,
-                192 + (i * 41) % 64,
-                192 + (i * 43) % 64,
-            )
-            top, bot = (dark, bright) if (i % 4) < 2 else (bright, dark)
-            rows = [[top] * w for _ in range(h // 2)] + [
-                [bot] * w for _ in range(h // 2)
-            ]
-            payload = codecs.encode_jpeg(
-                rows, quality=90, subsample="420" if i % 2 == 0 else "444"
-            )
-            width, height, px = codecs.decode_jpeg(payload)
-            return width, height, codecs.average_hash(codecs.png_grayscale(px))
-
-        for pdf in batches:
-            decoded = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "phash": [d[2] for d in decoded],
-                }
-            )
-
-    # pin the tiny audit rows BEFORE the global sort: orderBy range-
-    # partitions via a sampling pass that RE-EXECUTES its child, so the
-    # per-row codec work otherwise runs twice end-to-end (r12; measured
-    # 2 full 32-task Python stages per action).  The pinned frame is
-    # 4 narrow columns per doc - output-sized, never payload-sized.
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=PNG_AUDIT_SCHEMA)
-        .localCheckpoint()
-        .orderBy("media_id")
-    )
+    return _roundtrip_audit(df, id_col, _HASH_AUDIT_SCHEMA, build_and_decode)
 
 
 def gif_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -613,46 +592,22 @@ def gif_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, int, str]:
+        w = 6 + i % 11
+        h = 4 + 2 * (i % 4)
+        pal = [
+            ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256),
+            ((i * 41 + 7) % 256, (i * 61 + 13) % 256, (i * 89 + 29) % 256),
+        ]
+        frame = [[0] * w for _ in range(h // 2)] + [
+            [1] * w for _ in range(h // 2)
+        ]
+        payload = codecs.encode_gif([frame], pal)
+        width, height, dpal, frames = codecs.decode_gif(payload)
+        rgb = codecs.gif_frame_rgb(dpal, frames[0])
+        return width, height, codecs.average_hash(codecs.png_grayscale(rgb))
 
-        def build_and_decode(i: int) -> tuple[int, int, str]:
-            w = 6 + i % 11
-            h = 4 + 2 * (i % 4)
-            pal = [
-                ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256),
-                ((i * 41 + 7) % 256, (i * 61 + 13) % 256, (i * 89 + 29) % 256),
-            ]
-            frame = [[0] * w for _ in range(h // 2)] + [
-                [1] * w for _ in range(h // 2)
-            ]
-            payload = codecs.encode_gif([frame], pal)
-            width, height, dpal, frames = codecs.decode_gif(payload)
-            rgb = codecs.gif_frame_rgb(dpal, frames[0])
-            return width, height, codecs.average_hash(codecs.png_grayscale(rgb))
-
-        for pdf in batches:
-            decoded = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "phash": [d[2] for d in decoded],
-                }
-            )
-
-    # pin the tiny audit rows BEFORE the global sort: orderBy range-
-    # partitions via a sampling pass that RE-EXECUTES its child, so the
-    # per-row codec work otherwise runs twice end-to-end (r12; measured
-    # 2 full 32-task Python stages per action).  The pinned frame is
-    # 4 narrow columns per doc - output-sized, never payload-sized.
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=PNG_AUDIT_SCHEMA)
-        .localCheckpoint()
-        .orderBy("media_id")
-    )
+    return _roundtrip_audit(df, id_col, _HASH_AUDIT_SCHEMA, build_and_decode)
 
 
 def audio_tone_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -679,49 +634,28 @@ def audio_tone_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Output: ``media_id, sample_rate, n_frames, dominant_bin,
     amp_class``.
     """
+    import math
+
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import math
+    N, SR = 160, 8000
 
-        import pandas as pd
+    def build_and_detect(i: int) -> tuple[int, int, int, int]:
+        k = 3 + i % 10
+        amp = 8000 + (i % 5) * 1000
+        vals = [
+            round(amp * math.sin(2 * math.pi * k * n / N))
+            for n in range(N)
+        ]
+        payload = codecs.encode_wav(vals, SR)
+        sr, n, bin_, rms = codecs.wav_dominant_tone(payload)
+        return sr, n, bin_, int(rms // 1000)
 
-        N, SR = 160, 8000
-
-        def build_and_detect(i: int) -> tuple[int, int, int, int]:
-            k = 3 + i % 10
-            amp = 8000 + (i % 5) * 1000
-            vals = [
-                round(amp * math.sin(2 * math.pi * k * n / N))
-                for n in range(N)
-            ]
-            payload = codecs.encode_wav(vals, SR)
-            sr, n, bin_, rms = codecs.wav_dominant_tone(payload)
-            return sr, n, bin_, int(rms // 1000)
-
-        for pdf in batches:
-            got = [build_and_detect(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "sample_rate": [g[0] for g in got],
-                    "n_frames": [g[1] for g in got],
-                    "dominant_bin": [g[2] for g in got],
-                    "amp_class": [g[3] for g in got],
-                }
-            )
-
-    schema = (
-        "media_id long, sample_rate int, n_frames int,"
-        " dominant_bin int, amp_class int"
-    )
-    # pin-then-sort: see png_roundtrip_audit (the sampling pass of the
-    # global sort otherwise re-runs the codec map end-to-end)
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=schema)
-        .localCheckpoint()
-        .orderBy("media_id")
+    return _roundtrip_audit(
+        df,
+        id_col,
+        "sample_rate int, n_frames int, dominant_bin int, amp_class int",
+        build_and_detect,
     )
 
 
@@ -741,64 +675,42 @@ def png_palette_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def palette(i: int) -> list:
+        return [
+            (i % 256, (i * 3) % 256, (i * 7) % 256),
+            ((i * 11 + 1) % 256, (i * 13 + 5) % 256, (i * 17 + 9) % 256),
+            ((i * 19 + 2) % 256, (i * 23 + 6) % 256, (i * 29 + 10) % 256),
+            ((i * 31 + 3) % 256, (i * 37 + 7) % 256, (i * 41 + 11) % 256),
+        ]
 
-        def palette(i: int) -> list:
-            return [
-                (i % 256, (i * 3) % 256, (i * 7) % 256),
-                ((i * 11 + 1) % 256, (i * 13 + 5) % 256, (i * 17 + 9) % 256),
-                ((i * 19 + 2) % 256, (i * 23 + 6) % 256, (i * 29 + 10) % 256),
-                ((i * 31 + 3) % 256, (i * 37 + 7) % 256, (i * 41 + 11) % 256),
-            ]
+    def build_and_decode(i: int) -> tuple[int, int, int, int, int]:
+        w, h = 5 + i % 4, 4 + 2 * (i % 2)
+        top, bot = i % 4, (i + 1) % 4
+        idx = [[top] * w for _ in range(h // 2)] + [
+            [bot] * w for _ in range(h // 2)
+        ]
+        payload = codecs.encode_png_palette(
+            idx,
+            palette(i),
+            trns=[200, 150, 100, 50],
+            filter_type=i % 5,
+            interlace=(i % 2 == 0),
+        )
+        width, height, px = codecs.decode_png(payload)
+        luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
+        return (
+            width,
+            height,
+            luma(px[0][0]),
+            luma(px[height - 1][0]),
+            px[0][0][3],
+        )
 
-        def build_and_decode(i: int) -> tuple[int, int, int, int, int]:
-            w, h = 5 + i % 4, 4 + 2 * (i % 2)
-            top, bot = i % 4, (i + 1) % 4
-            idx = [[top] * w for _ in range(h // 2)] + [
-                [bot] * w for _ in range(h // 2)
-            ]
-            payload = codecs.encode_png_palette(
-                idx,
-                palette(i),
-                trns=[200, 150, 100, 50],
-                filter_type=i % 5,
-                interlace=(i % 2 == 0),
-            )
-            width, height, px = codecs.decode_png(payload)
-            luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
-            return (
-                width,
-                height,
-                luma(px[0][0]),
-                luma(px[height - 1][0]),
-                px[0][0][3],
-            )
-
-        for pdf in batches:
-            got = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [g[0] for g in got],
-                    "height": [g[1] for g in got],
-                    "luma_top": [g[2] for g in got],
-                    "luma_bot": [g[3] for g in got],
-                    "alpha_top": [g[4] for g in got],
-                }
-            )
-
-    schema = (
-        "media_id long, width int, height int, luma_top int,"
-        " luma_bot int, alpha_top int"
-    )
-    # pin-then-sort: see png_roundtrip_audit (the sampling pass of the
-    # global sort otherwise re-runs the codec map end-to-end)
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=schema)
-        .localCheckpoint()
-        .orderBy("media_id")
+    return _roundtrip_audit(
+        df,
+        id_col,
+        "width int, height int, luma_top int, luma_bot int, alpha_top int",
+        build_and_decode,
     )
 
 
@@ -819,69 +731,47 @@ def png_subbyte_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, ...]:
+        depth = (1, 2, 4)[i % 3]
+        hi = (1 << depth) - 1
+        w, h = 5 + i % 7, 3 + i % 4
+        ft, inter = i % 5, (i % 2 == 0)
+        vt, vb = i % (hi + 1), (i + 1) % (hi + 1)
+        rows = [[vt] * w for _ in range(h // 2)] + [
+            [vb] * w for _ in range(h - h // 2)
+        ]
+        gw, gh, gpx = codecs.decode_png(
+            codecs.encode_png_gray(
+                rows, filter_type=ft, interlace=inter, depth=depth
+            )
+        )
+        pal = [
+            ((i * 7 + v * 13) % 256, (i * 11 + v * 17) % 256,
+             (i * 3 + v * 23) % 256)
+            for v in range(hi + 1)
+        ]
+        it, ib = i % (hi + 1), (i * 5 + 1) % (hi + 1)
+        idx = [[it] * w for _ in range(h // 2)] + [
+            [ib] * w for _ in range(h - h // 2)
+        ]
+        _, _, ppx = codecs.decode_png(
+            codecs.encode_png_palette(
+                idx, pal, filter_type=ft, interlace=inter, depth=depth
+            )
+        )
+        luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
+        return (
+            gw, gh,
+            gpx[0][0][0], gpx[gh - 1][0][0],
+            luma(ppx[0][0]), luma(ppx[gh - 1][0]),
+        )
 
-        def build_and_decode(i: int) -> tuple[int, ...]:
-            depth = (1, 2, 4)[i % 3]
-            hi = (1 << depth) - 1
-            w, h = 5 + i % 7, 3 + i % 4
-            ft, inter = i % 5, (i % 2 == 0)
-            vt, vb = i % (hi + 1), (i + 1) % (hi + 1)
-            rows = [[vt] * w for _ in range(h // 2)] + [
-                [vb] * w for _ in range(h - h // 2)
-            ]
-            gw, gh, gpx = codecs.decode_png(
-                codecs.encode_png_gray(
-                    rows, filter_type=ft, interlace=inter, depth=depth
-                )
-            )
-            pal = [
-                ((i * 7 + v * 13) % 256, (i * 11 + v * 17) % 256,
-                 (i * 3 + v * 23) % 256)
-                for v in range(hi + 1)
-            ]
-            it, ib = i % (hi + 1), (i * 5 + 1) % (hi + 1)
-            idx = [[it] * w for _ in range(h // 2)] + [
-                [ib] * w for _ in range(h - h // 2)
-            ]
-            _, _, ppx = codecs.decode_png(
-                codecs.encode_png_palette(
-                    idx, pal, filter_type=ft, interlace=inter, depth=depth
-                )
-            )
-            luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
-            return (
-                gw, gh,
-                gpx[0][0][0], gpx[gh - 1][0][0],
-                luma(ppx[0][0]), luma(ppx[gh - 1][0]),
-            )
-
-        for pdf in batches:
-            got = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [g[0] for g in got],
-                    "height": [g[1] for g in got],
-                    "gray_top": [g[2] for g in got],
-                    "gray_bot": [g[3] for g in got],
-                    "pal_luma_top": [g[4] for g in got],
-                    "pal_luma_bot": [g[5] for g in got],
-                }
-            )
-
-    schema = (
-        "media_id long, width int, height int, gray_top int,"
-        " gray_bot int, pal_luma_top int, pal_luma_bot int"
-    )
-    # pin-then-sort: see png_roundtrip_audit (the sampling pass of the
-    # global sort otherwise re-runs the codec map end-to-end)
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=schema)
-        .localCheckpoint()
-        .orderBy("media_id")
+    return _roundtrip_audit(
+        df,
+        id_col,
+        "width int, height int, gray_top int, gray_bot int,"
+        " pal_luma_top int, pal_luma_bot int",
+        build_and_decode,
     )
 
 
@@ -901,64 +791,44 @@ def tiff_roundtrip_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from flashml_spark.functions import codecs
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, int, int, int]:
+        mode = i % 3
+        w, h = 6 + i % 6, 4 + i % 3
+        kw = dict(
+            compression=5 if i % 2 else 1,
+            big_endian=(i % 5 == 0),
+            rows_per_strip=1 + i % 4,
+            predictor=2 if i % 2 else 1,
+        )
+        top_n, bot_n = h // 2, h - h // 2
+        if mode == 0:
+            tp = ((i * 7) % 256, (i * 11) % 256, (i * 13) % 256)
+            bp = ((i * 17 + 1) % 256, (i * 19 + 2) % 256,
+                  (i * 23 + 3) % 256)
+            rows = [[tp] * w] * top_n + [[bp] * w] * bot_n
+            payload = codecs.encode_tiff(rows, **kw)
+        elif mode == 1:
+            vt, vb = (i * 29) % 256, (i * 31 + 5) % 256
+            rows = [[vt] * w] * top_n + [[vb] * w] * bot_n
+            payload = codecs.encode_tiff(rows, gray=True, **kw)
+        else:
+            pal = [
+                ((i * 7 + v * 13) % 256, (i * 11 + v * 17) % 256,
+                 (i * 3 + v * 23) % 256)
+                for v in range(16)
+            ]
+            it, ib = i % 16, (i * 5 + 1) % 16
+            rows = [[it] * w] * top_n + [[ib] * w] * bot_n
+            payload = codecs.encode_tiff(rows, palette=pal, **kw)
+        dw, dh, px = codecs.decode_tiff(payload)
+        luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
+        return dw, dh, luma(px[0][0]), luma(px[dh - 1][0])
 
-        def build_and_decode(i: int) -> tuple[int, int, int, int]:
-            mode = i % 3
-            w, h = 6 + i % 6, 4 + i % 3
-            kw = dict(
-                compression=5 if i % 2 else 1,
-                big_endian=(i % 5 == 0),
-                rows_per_strip=1 + i % 4,
-                predictor=2 if i % 2 else 1,
-            )
-            top_n, bot_n = h // 2, h - h // 2
-            if mode == 0:
-                tp = ((i * 7) % 256, (i * 11) % 256, (i * 13) % 256)
-                bp = ((i * 17 + 1) % 256, (i * 19 + 2) % 256,
-                      (i * 23 + 3) % 256)
-                rows = [[tp] * w] * top_n + [[bp] * w] * bot_n
-                payload = codecs.encode_tiff(rows, **kw)
-            elif mode == 1:
-                vt, vb = (i * 29) % 256, (i * 31 + 5) % 256
-                rows = [[vt] * w] * top_n + [[vb] * w] * bot_n
-                payload = codecs.encode_tiff(rows, gray=True, **kw)
-            else:
-                pal = [
-                    ((i * 7 + v * 13) % 256, (i * 11 + v * 17) % 256,
-                     (i * 3 + v * 23) % 256)
-                    for v in range(16)
-                ]
-                it, ib = i % 16, (i * 5 + 1) % 16
-                rows = [[it] * w] * top_n + [[ib] * w] * bot_n
-                payload = codecs.encode_tiff(rows, palette=pal, **kw)
-            dw, dh, px = codecs.decode_tiff(payload)
-            luma = lambda p: (p[0] * 299 + p[1] * 587 + p[2] * 114) // 1000  # noqa: E731
-            return dw, dh, luma(px[0][0]), luma(px[dh - 1][0])
-
-        for pdf in batches:
-            got = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [g[0] for g in got],
-                    "height": [g[1] for g in got],
-                    "luma_top": [g[2] for g in got],
-                    "luma_bot": [g[3] for g in got],
-                }
-            )
-
-    schema = (
-        "media_id long, width int, height int, luma_top int, luma_bot int"
-    )
-    # pin-then-sort: see png_roundtrip_audit (the sampling pass of the
-    # global sort otherwise re-runs the codec map end-to-end)
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=schema)
-        .localCheckpoint()
-        .orderBy("media_id")
+    return _roundtrip_audit(
+        df,
+        id_col,
+        "width int, height int, luma_top int, luma_bot int",
+        build_and_decode,
     )
 
 
@@ -985,47 +855,23 @@ def jpeg_progressive_audit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ((1, 1), (2, 9), (10, 35), (36, 63)),
     )
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def build_and_decode(i: int) -> tuple[int, int, str]:
+        w = 8 + i % 9
+        h = 4 + 2 * (i % 3)
+        dark = ((i * 23) % 64, (i * 29) % 64, (i * 31) % 64)
+        bright = (
+            192 + (i * 37) % 64,
+            192 + (i * 41) % 64,
+            192 + (i * 43) % 64,
+        )
+        top, bot = (dark, bright) if (i % 4) < 2 else (bright, dark)
+        rows = [[top] * w for _ in range(h // 2)] + [
+            [bot] * w for _ in range(h // 2)
+        ]
+        payload = codecs.encode_jpeg_progressive(
+            rows, quality=90, bands=_BANDS[i % 3], successive=i % 3
+        )
+        width, height, px = codecs.decode_jpeg(payload)
+        return width, height, codecs.average_hash(codecs.png_grayscale(px))
 
-        def build_and_decode(i: int) -> tuple[int, int, str]:
-            w = 8 + i % 9
-            h = 4 + 2 * (i % 3)
-            dark = ((i * 23) % 64, (i * 29) % 64, (i * 31) % 64)
-            bright = (
-                192 + (i * 37) % 64,
-                192 + (i * 41) % 64,
-                192 + (i * 43) % 64,
-            )
-            top, bot = (dark, bright) if (i % 4) < 2 else (bright, dark)
-            rows = [[top] * w for _ in range(h // 2)] + [
-                [bot] * w for _ in range(h // 2)
-            ]
-            payload = codecs.encode_jpeg_progressive(
-                rows, quality=90, bands=_BANDS[i % 3], successive=i % 3
-            )
-            width, height, px = codecs.decode_jpeg(payload)
-            return width, height, codecs.average_hash(codecs.png_grayscale(px))
-
-        for pdf in batches:
-            decoded = [build_and_decode(int(i)) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "phash": [d[2] for d in decoded],
-                }
-            )
-
-    # pin the tiny audit rows BEFORE the global sort: orderBy range-
-    # partitions via a sampling pass that RE-EXECUTES its child, so the
-    # per-row codec work otherwise runs twice end-to-end (r12; measured
-    # 2 full 32-task Python stages per action).  The pinned frame is
-    # 4 narrow columns per doc - output-sized, never payload-sized.
-    return (
-        df.select(id_col)
-        .mapInPandas(run, schema=PNG_AUDIT_SCHEMA)
-        .localCheckpoint()
-        .orderBy("media_id")
-    )
+    return _roundtrip_audit(df, id_col, _HASH_AUDIT_SCHEMA, build_and_decode)

@@ -111,32 +111,6 @@ def minority_majority_labels(df: DataFrame, label_col: str) -> DataFrame:
     return df.groupBy(label_col).agg(F.count(F.lit(1)).alias("cnt")).orderBy("cnt", label_col)
 
 
-def balance_random(
-    df: DataFrame,
-    label_col: str,
-    minority_label,
-    target_minority_fraction: float,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Random over-sampling of the minority class to reach a target fraction
-    (``TrainTestSampler.scala:205-243``): sample-with-replacement the minority
-    rows and union with the rest.
-    """
-    counts = {
-        r[label_col]: r["n"]
-        for r in df.groupBy(label_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }  # tiny: one row per class
-    n_min = counts.get(minority_label, 0)
-    n_other = sum(v for k, v in counts.items() if k != minority_label)
-    if n_min == 0:
-        return df
-    target = target_minority_fraction * n_other / (1.0 - target_minority_fraction)
-    frac = max(target / n_min, 0.0)
-    minority = df.filter(F.col(label_col) == minority_label)
-    rest = df.filter(F.col(label_col) != minority_label)
-    return rest.unionByName(minority.sample(True, frac, seed))
-
-
 def balance_conditional(
     df: DataFrame,
     label_col: str,
@@ -160,16 +134,6 @@ def balance_conditional(
     thresh = bounds["mn"] + keep_fraction * (bounds["mx"] - bounds["mn"])
     keep = (F.col(label_col) != majority_label) | (F.col(random_col) < thresh)
     return df.filter(keep)
-
-
-def minority_fraction(df: DataFrame, label_col: str, positive_label) -> float:
-    """Positive-class fraction used by the minority-class validation warning
-    (``TrainTestSampler.scala:169-192``; threshold 0.002 FMC:278)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col(label_col) == positive_label, 1)).alias("pos"),
-    ).first()
-    return (row["pos"] / row["n"]) if row["n"] else 0.0
 
 
 def quota_per_group(

@@ -20,11 +20,9 @@ from flashml_spark.functions import hashing as H
 # job instead of recomputing).  The gate reads the Catalyst-estimated
 # size of the frame (driver-side statistics, no job) and skips the pin
 # past the budget, falling back to plain per-consumer recomputation —
-# the same bounded-fast-path posture as the driver solves.
-# $SPARK_GRAFT_PIN_MAX_BYTES overrides (<= 0 disables pinning outright);
-# the default is far above every test scale, so bench behavior is
-# unchanged, and far below any corpus where local-disk pinning would
-# be unsafe.
+# the same bounded-fast-path posture as the driver solves.  The budget
+# is far above every test scale, so bench behavior is unchanged, and
+# far below any corpus where local-disk pinning would be unsafe.
 _PIN_MAX_BYTES_DEFAULT = 32 << 30
 
 
@@ -33,21 +31,20 @@ def _bounded_pin(frame: DataFrame) -> DataFrame:
     the executor-local-disk budget, ``frame`` unchanged (lineage-safe
     recompute per consumer) past it.  Estimate unavailable -> pin (the
     status quo for every in-repo caller, whose inputs are parquet scans
-    with file-size statistics)."""
-    import os
-
-    budget = int(
-        os.environ.get("SPARK_GRAFT_PIN_MAX_BYTES", _PIN_MAX_BYTES_DEFAULT)
+    with file-size statistics).  RDD-backed inputs such as
+    ``createDataFrame(list)`` report ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue) rather than a size, so an estimate at or above it
+    counts as unavailable."""
+    unknown = (
+        frame.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
     )
-    if budget <= 0:
-        return frame
     try:
         est = int(
             frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # pragma: no cover - stats are best-effort
         est = -1
-    if est > budget:
+    if _PIN_MAX_BYTES_DEFAULT < est < unknown:
         return frame
     return frame.localCheckpoint()
 

@@ -109,12 +109,6 @@ def local_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.createDataFrame(pdf, st)
 
 
-def register_tables(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register the benchmark tables as temp views for SQL-chain queries."""
-    for name, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(name)
-
-
 def run_sql_view_chain(
     spark: SparkSession, queries: list[str], view_prefix: str = "flashml_view_"
 ) -> DataFrame:

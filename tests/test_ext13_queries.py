@@ -631,11 +631,14 @@ def test_k_anonymity_hand_case(spark):
 
 def test_bounded_pin_paths_identical(spark, monkeypatch):
     # The tokenize pin is gated on the Catalyst-estimated frame size
-    # ($SPARK_GRAFT_PIN_MAX_BYTES): past the budget the operators run
+    # (textops._PIN_MAX_BYTES_DEFAULT): past the budget the operators run
     # UNPINNED (lineage-safe recompute per consumer).  Both paths must
-    # produce identical rows; a 1-byte budget forces the unpinned path,
-    # <= 0 disables pinning too.
-    docs = spark.createDataFrame(
+    # produce identical rows; a 1-byte budget forces the unpinned path.
+    # The input is a LocalRelation so it carries a real size estimate.
+    from flashml_spark.sources.readers import local_rows
+
+    docs = local_rows(
+        spark,
         [
             (1, "a b c a b c d e f a b c"),
             (2, "all words unique here"),
@@ -648,31 +651,44 @@ def test_bounded_pin_paths_identical(spark, monkeypatch):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
+    pinned_flags = []
+    gate = textops._bounded_pin
+
+    def spy(frame):
+        out = gate(frame)
+        pinned_flags.append(out is not frame)
+        return out
+
+    monkeypatch.setattr(textops, "_bounded_pin", spy)
     for op in (
         lambda d: textops.self_repetition_stats(d, "text", "doc_id", n=2),
         lambda d: textops.dup_span_stats(d, "text", "doc_id", n=2),
         lambda d: textops.remove_dup_spans(d, "text", "doc_id", n=2),
         lambda d: textops.bigram_logprob_score(d, "text", "doc_id"),
     ):
-        monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES", raising=False)
+        pinned_flags.clear()
         pinned = rows(op(docs))
-        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "1")
-        over_budget = rows(op(docs))
-        monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "0")
-        disabled = rows(op(docs))
-        assert pinned == over_budget == disabled
+        assert pinned_flags and all(pinned_flags)
+        pinned_flags.clear()
+        with monkeypatch.context() as m:
+            m.setattr(textops, "_PIN_MAX_BYTES_DEFAULT", 1)
+            over_budget = rows(op(docs))
+        assert pinned_flags and not any(pinned_flags)
+        assert pinned == over_budget
 
 
 def test_bounded_pin_gate_behavior(spark, monkeypatch):
     from flashml_spark.operators.textops import _bounded_pin
 
+    def is_pinned(df):
+        return _bounded_pin(df) is not df
+
     frame = spark.range(10).selectExpr("id", "id * 2 AS v")
-    # default budget: pinned (Checkpoint scan in the plan)
-    monkeypatch.delenv("SPARK_GRAFT_PIN_MAX_BYTES", raising=False)
-    assert "ExistingRDD" in _bounded_pin(frame)._jdf.queryExecution().toString()
+    # default budget: pinned
+    assert is_pinned(frame)
     # 1-byte budget: estimate exceeds it -> NOT pinned
-    monkeypatch.setenv("SPARK_GRAFT_PIN_MAX_BYTES", "1")
-    assert (
-        "ExistingRDD"
-        not in _bounded_pin(frame)._jdf.queryExecution().toString()
-    )
+    monkeypatch.setattr(textops, "_PIN_MAX_BYTES_DEFAULT", 1)
+    assert not is_pinned(frame)
+    # an RDD-backed input has no estimate (Catalyst reports
+    # spark.sql.defaultSizeInBytes): pinned whatever the budget
+    assert is_pinned(spark.createDataFrame([(1, 2)], "id long, v long"))
