@@ -16,19 +16,29 @@ under the reference's directory contract via SavepointManager.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.ml.feature import RegexTokenizer
+from pyspark.ml.functions import vector_to_array
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flashml_spark.metrics.binary import auroc, best_fbeta_threshold
 from flashml_spark.metrics.multiclass import multiclass_metrics
 from flashml_spark.operators import relational, sampling
+from flashml_spark.operators.binning import binning_output_name, binning_specs_for_page
 from flashml_spark.training.estimators import (
     build_estimator,
     build_label_indexer,
     strip_training_summary,
+)
+from flashml_spark.training.platt import PlattScalar, PlattScalarModel
+from flashml_spark.training.postprocess import (
+    index_to_string,
+    top_k_intents,
+    uplift_transform,
 )
 from flashml_spark.vectorization import build_assembler, build_text_vectorizer
 
@@ -185,7 +195,6 @@ class Experiment:
         # categorical list (ConfigValues.scala:104-119,380-430)
         from flashml_spark.operators.binning import (
             BinningEstimator,
-            binning_specs_for_page,
             resolve_binned_roles,
         )
 
@@ -227,27 +236,18 @@ class Experiment:
                 stages.extend(chain_stages)
 
         for col in c.text_cols:
+            toks, tokenized = col, False
             if col in prep_chains:
-                chain_stages, final_col, tokenized = prep_chains[col]
+                chain_stages, toks, tokenized = prep_chains[col]
                 stages.extend(chain_stages)
-                toks = final_col
-                if not tokenized:
-                    toks = f"{col}__toks"
-                    stages.append(
-                        __import__(
-                            "pyspark.ml.feature", fromlist=["RegexTokenizer"]
-                        ).RegexTokenizer(
-                            inputCol=final_col, outputCol=toks,
-                            pattern=r"\s+", toLowercase=True,
-                        )
-                    )
-            else:
-                toks = f"{col}__toks"
+            if not tokenized:
                 stages.append(
-                    __import__("pyspark.ml.feature", fromlist=["RegexTokenizer"]).RegexTokenizer(
-                        inputCol=col, outputCol=toks, pattern=r"\s+", toLowercase=True
+                    RegexTokenizer(
+                        inputCol=toks, outputCol=f"{col}__toks",
+                        pattern=r"\s+", toLowercase=True,
                     )
                 )
+                toks = f"{col}__toks"
             vec = f"{col}__vec"
             stages.extend(build_text_vectorizer(c.text_method, toks, vec, c.slots))
             feature_vec_cols.append(vec)
@@ -391,6 +391,58 @@ class Experiment:
                 return list(stage.labels)
         return None
 
+    @property
+    def _n_pages(self) -> int:
+        c = self.config
+        return c.num_pages if (c.page_col and c.num_pages > 1) else 1
+
+    def _map_pages(self, fn, items) -> list:
+        """``[fn(x) for x in items]``, in order.  Several items run from a
+        driver thread pool of ``min(len(items), parallelism)`` threads, so
+        independent per-page jobs overlap: later pages' jobs back-fill the
+        cores an earlier page's straggling stages leave idle.  The pool
+        changes when jobs run, not what they compute."""
+        items = list(items)
+        if len(items) <= 1:
+            return [fn(x) for x in items]
+        workers = min(len(items), self.config.parallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            return list(pool.map(fn, items))
+
+    def _finish_page(
+        self, scored: DataFrame, pipeline: PipelineModel, k: int
+    ) -> DataFrame:
+        """The scoring tail after the model (and Platt calibrator) of page
+        ``k``: [Uplift] → [TopK] → [IndexToString] → post-predict filter →
+        drop the page's binned columns.  ``pipeline`` is the page's full
+        fitted pipeline; ``run`` and ``predict`` both end each page here,
+        so predict-only scoring reproduces the training run's."""
+        c = self.config
+        labels = self._indexer_labels(pipeline)
+        if c.uplift_treatment:
+            # the bare classifier stage: last stage, or the one before the
+            # Platt calibrator when the tail is calibrated (the calibrator
+            # is then ALSO the margin->probability map the counterfactual
+            # scorings need)
+            model, calibrator = pipeline.stages[-2:]
+            if not isinstance(calibrator, PlattScalarModel):
+                model, calibrator = calibrator, None
+            scored = uplift_transform(scored, model, calibrator=calibrator)
+        if c.top_k and labels:
+            scored = top_k_intents(scored, labels, k=c.top_k)
+        if labels:
+            scored = index_to_string(scored, labels)
+        scored = relational.post_predict_filter(scored, c.post_predict_filter)
+        # binned columns are page-qualified intermediates
+        # (<var>_page<k>_binned): drop them before the cross-page union,
+        # which unions by name
+        return scored.drop(
+            *[
+                binning_output_name(spec["variable"], k + 1)
+                for spec in binning_specs_for_page(c.binning, k)
+            ]
+        )
+
     # ---- lifecycle -------------------------------------------------------
     _RESUME_STEPS = ("sampling", "vectorization", "modelling")
 
@@ -458,7 +510,7 @@ class Experiment:
         elif resume_from == "vectorization":
             train, test = sp.load("sampling", "train"), sp.load("sampling", "test")
 
-        n_pages = c.num_pages if (c.page_col and c.num_pages > 1) else 1
+        n_pages = self._n_pages
         if resume_from == "modelling":
             train_pages = test_pages = [None] * n_pages
         elif n_pages > 1:
@@ -467,7 +519,6 @@ class Experiment:
         else:
             train_pages, test_pages = [train], [test]
 
-        scored_pages = []
         self.models_ = []
         self.tuning_ = []
 
@@ -499,16 +550,12 @@ class Experiment:
                     te = sp.load("vectorization", "test", page=k)
                 tr_v = tr_v.persist()
             model, tuning_info = self._fit_model(tr_v, label_col, page=k)
-            labels = self._indexer_labels(prep)
-
-            te_v = te  # already vectorized (fresh transform or savepoint)
-            scored = model.transform(te_v)
+            scored = model.transform(te)  # te: already vectorized
             tail = [model]
-            calibrator = None
             if use_platt:
-                from flashml_spark.training.platt import PlattScalar
-
-                calibrator = PlattScalar(label_col=label_col).fit(model.transform(tr_v))
+                calibrator = PlattScalar(
+                    label_col=label_col, parallelism=c.parallelism
+                ).fit(model.transform(tr_v))
                 scored = calibrator.transform(scored)
                 # the calibrator is part of the persisted pipeline so that
                 # predict-only resume reproduces calibrated probabilities
@@ -516,37 +563,9 @@ class Experiment:
                 # MLWritable pipeline stages, loaded by
                 # ModelTrainingEngine.loadPipelineArray:109-118)
                 tail.append(calibrator)
-            full_model = PipelineModel(prep.stages + tail)
-            if c.uplift_treatment:
-                from flashml_spark.training.postprocess import uplift_transform
-
-                scored = uplift_transform(scored, model, calibrator=calibrator)
-            if c.top_k and labels:
-                from flashml_spark.training.postprocess import top_k_intents
-
-                scored = top_k_intents(scored, labels, k=c.top_k)
-            if labels:
-                from flashml_spark.training.postprocess import index_to_string
-
-                scored = index_to_string(scored, labels)
             tr_v.unpersist()
-
-            scored = relational.post_predict_filter(scored, c.post_predict_filter)
-            if c.binning:
-                # per-page binned columns are page-qualified intermediates
-                # (<var>_page<k>_binned) — drop before the cross-page union,
-                # which unions by name
-                from flashml_spark.operators.binning import (
-                    binning_output_name,
-                    binning_specs_for_page,
-                )
-
-                scored = scored.drop(
-                    *[
-                        binning_output_name(s["variable"], k + 1)
-                        for s in binning_specs_for_page(c.binning, k)
-                    ]
-                )
+            full_model = PipelineModel(prep.stages + tail)
+            scored = self._finish_page(scored, full_model, k)
             if sp:
                 sp.save(
                     scored.drop(*[col for col, t in scored.dtypes if t == "vector"]),
@@ -557,31 +576,10 @@ class Experiment:
                 )
             return scored, full_model, tuning_info
 
-        # Independent page models fit CONCURRENTLY from a small driver
-        # thread pool (guide §2.6 "overlap independent jobs"): each
-        # page's prep fit / model fit / savepoints touch only its own
-        # page{k} paths and frames, so later pages' jobs back-fill the
-        # cores an earlier page's straggling single-task stages leave
-        # idle.  Results are deterministic — every fit sees the exact
-        # frame (and partition layout) the sequential loop gave it; the
-        # pool only changes WHEN jobs run, not what they compute.
-        # 2-3 in flight is plenty (guide); page order is preserved by
-        # index.
-        page_args = list(enumerate(zip(train_pages, test_pages)))
-        if len(page_args) > 1:
-            import os as _os
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(
-                len(page_args),
-                int(_os.environ.get("SPARK_GRAFT_PAGE_THREADS", "4")),
-            )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = list(
-                    pool.map(lambda a: _run_page(a[0], *a[1]), page_args)
-                )
-        else:
-            results = [_run_page(k, tr, te) for k, (tr, te) in page_args]
+        # independent page models fit concurrently; page order is kept
+        results = self._map_pages(
+            lambda k: _run_page(k, train_pages[k], test_pages[k]), range(n_pages)
+        )
         scored_pages = [r[0] for r in results]
         self.models_ = [r[1] for r in results]
         self.tuning_ = [r[2] for r in results]
@@ -597,28 +595,17 @@ class Experiment:
         )
         self.metrics_ = multiclass_metrics(scored_all, label_col, "prediction")
         if not c.multi_intent and "probability" in scored_all.columns:
-            prob_type = dict(scored_all.dtypes)["probability"]
-            if prob_type == "vector":
-                from pyspark.ml.functions import vector_to_array
-
-                positive = vector_to_array("probability").getItem(1)
-            else:  # Platt/uplift emit array<double>
-                positive = F.element_at(F.col("probability"), 2)
+            positive = _positive_probability(scored_all)
             binary = scored_all.select(
                 positive.alias("positive_probability"),
                 F.col(label_col).alias("label"),
             )
             self.metrics_["auroc"] = auroc(binary)
             self.metrics_["bestF2"] = best_fbeta_threshold(binary)
-        if (
-            c.custom_metrics
-            and c.primary_keys
-            and not c.multi_intent
-            and "probability" in scored_all.columns
-        ):
-            self.metrics_["customMetrics"] = self._custom_metrics_rows(
-                scored_all, label_col
-            )
+            if c.custom_metrics and c.primary_keys:
+                self.metrics_["customMetrics"] = self._custom_metrics_rows(
+                    scored_all, label_col, positive
+                )
         if c.savepoint_root:
             from flashml_spark.metrics.report import MetricsAccumulator
 
@@ -640,7 +627,9 @@ class Experiment:
             data.unpersist()
         return self.metrics_
 
-    def _custom_metrics_rows(self, scored_all: DataFrame, label_col: str) -> list:
+    def _custom_metrics_rows(
+        self, scored_all: DataFrame, label_col: str, positive: Column
+    ) -> list:
         """The reference's custom-metrics step — journey-level hotlead
         rollup (``WebCustomMetricsEvaluator.scala:126-189``,
         ``totalVisitorsCount_test_config.json``): per page, the hotlead
@@ -654,14 +643,7 @@ class Experiment:
 
         c = self.config
         cm = c.custom_metrics
-        n_pages = c.num_pages if (c.page_col and c.num_pages > 1) else 1
-        prob_type = dict(scored_all.dtypes)["probability"]
-        if prob_type == "vector":
-            from pyspark.ml.functions import vector_to_array
-
-            positive = vector_to_array("probability").getItem(1)
-        else:
-            positive = F.element_at(F.col("probability"), 2)
+        n_pages = self._n_pages
         page_col = c.page_col or "__cm_page"
         if not c.page_col:
             scored_all = scored_all.withColumn(page_col, F.lit(1))
@@ -684,19 +666,8 @@ class Experiment:
             )
 
         # per-page threshold sweeps are independent read-only actions over
-        # the same scored frame — overlap them (guide §2.6), same pool
-        # sizing as the page-fit loop
-        if n_pages > 1:
-            import os as _os
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(
-                n_pages, int(_os.environ.get("SPARK_GRAFT_PAGE_THREADS", "4"))
-            )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                best_f2 = list(pool.map(_page_best_f2, range(n_pages)))
-        else:
-            best_f2 = [_page_best_f2(0)]
+        # the same scored frame
+        best_f2 = self._map_pages(_page_best_f2, range(n_pages))
         thresholds = [
             float(given[k]) if given else float(best_f2[k]["threshold"])
             for k in range(n_pages)
@@ -753,55 +724,38 @@ class Experiment:
         root = root or c.savepoint_root
         if root is None:
             raise ValueError("predict-only runs need savepoint_root")
-        n = c.num_pages if (c.page_col and c.num_pages > 1) else 1
         self.models_ = [
             PipelineModel.load(f"{root}/pipeline/page{k}/model_pipeline")
-            for k in range(n)
+            for k in range(self._n_pages)
         ]
         return self.models_
 
     def predict(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         """Score new data with persisted models: read (labels optional) →
         page fan-out → per-page transform (the loaded pipeline includes the
-        model tail and any Platt calibrator) → the SAME post chain as
-        ``run`` (TopK, IndexToString, post-predict filter) — so predict-only
-        resume reproduces training-run scoring exactly
+        model tail and any Platt calibrator) → the SAME scoring tail as
+        ``run`` (``_finish_page``) → page union — so predict-only resume
+        reproduces training-run scoring exactly
         (``PipelineSteps.scala:73-78``)."""
         c = self.config
         if not self.models_:
             self.load_models()
         data = self.read(df, require_response=False)
-        if c.page_col and c.num_pages > 1:
+        if self._n_pages > 1:
             pages = relational.split_page_level(data, c.page_col, c.num_pages)
         else:
             pages = [data]
+        return relational.union_pages(
+            [
+                self._finish_page(m.transform(p), m, k)
+                for k, (m, p) in enumerate(zip(self.models_, pages))
+            ]
+        )
 
-        scored_pages = []
-        for m, p in zip(self.models_, pages):
-            scored = m.transform(p)
-            labels = self._indexer_labels(m)
-            if c.uplift_treatment:
-                from flashml_spark.training.platt import PlattScalarModel
-                from flashml_spark.training.postprocess import uplift_transform
 
-                # the bare classifier stage: last stage, or the one before
-                # the Platt calibrator when the tail is calibrated (the
-                # calibrator is then ALSO the margin->probability map the
-                # counterfactual scorings need)
-                stages = list(m.stages)
-                if isinstance(stages[-1], PlattScalarModel):
-                    model_stage, cal = stages[-2], stages[-1]
-                else:
-                    model_stage, cal = stages[-1], None
-                scored = uplift_transform(scored, model_stage, calibrator=cal)
-            if c.top_k and labels:
-                from flashml_spark.training.postprocess import top_k_intents
-
-                scored = top_k_intents(scored, labels, k=c.top_k)
-            if labels:
-                from flashml_spark.training.postprocess import index_to_string
-
-                scored = index_to_string(scored, labels)
-            scored_pages.append(scored)
-        scored = relational.union_pages(scored_pages)
-        return relational.post_predict_filter(scored, c.post_predict_filter)
+def _positive_probability(scored: DataFrame) -> Column:
+    """P(class 1) from the ``probability`` column: a vector from Spark
+    models, an array<double> from Platt / uplift."""
+    if dict(scored.dtypes)["probability"] == "vector":
+        return vector_to_array("probability").getItem(1)
+    return F.element_at(F.col("probability"), 2)

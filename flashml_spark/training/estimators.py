@@ -142,6 +142,22 @@ def build_param_grid(estimator, grid_spec: dict[str, list]) -> list:
     return builder.build()
 
 
+def with_params(est, params: dict, max_iter: int | None = None):
+    """A copy of ``est`` with the Spark param map ``params`` set, plus
+    ``maxIter`` when ``max_iter`` is given and ``est`` has that param
+    (HyperBand's rung budget).  An estimator-like ensemble that defines
+    its own ``with_params`` (``OneVsRestWithScores``) gets the call
+    instead, so the tuners treat it as one tunable estimator."""
+    if hasattr(est, "with_params"):
+        return est.with_params(params, max_iter=max_iter)
+    est = est.copy()
+    for k, v in params.items():
+        est.set(est.getParam(k), v)  # in-place; returns None
+    if max_iter is not None and est.hasParam("maxIter"):
+        est.set(est.getParam("maxIter"), int(max_iter))
+    return est
+
+
 def strip_training_summary(model) -> None:
     """Drop a fitted model's training summary from the JVM object.
 

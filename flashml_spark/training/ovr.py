@@ -27,7 +27,7 @@ from pyspark.ml.util import (
     MLWritable,
     MLWriter,
 )
-from flashml_spark.training.estimators import strip_training_summary
+from flashml_spark.training.estimators import strip_training_summary, with_params
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,17 +60,8 @@ class OneVsRestWithScores:
         fits).  ``max_iter`` maps to the base estimator's ``maxIter``
         when it has one (HyperBand's rung budget)."""
         base = self.base_estimator_factory
-
-        def factory():
-            est = base()
-            for k, v in params.items():
-                est.set(est.getParam(k), v)
-            if max_iter is not None and est.hasParam("maxIter"):
-                est.set(est.getParam("maxIter"), int(max_iter))
-            return est
-
         return OneVsRestWithScores(
-            factory,
+            lambda: with_params(base(), params, max_iter),
             label_col=self.label_col,
             features_col=self.features_col,
             parallelism=self.parallelism,

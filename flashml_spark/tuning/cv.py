@@ -19,7 +19,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.sql import DataFrame
 
-from flashml_spark.training.estimators import strip_training_summary
+from flashml_spark.training.estimators import strip_training_summary, with_params
 from pyspark.sql import functions as F
 
 FOLD_METRICS = ("accuracy", "weightedPrecision", "weightedRecall", "f1")
@@ -61,16 +61,6 @@ class CrossValidatorWithFoldMetrics:
             labelCol=self.label_col, predictionCol="prediction", metricName=metric
         )
 
-    def _apply_params(self, params: dict):
-        if hasattr(self.estimator, "with_params"):
-            # estimator-like ensembles (OneVsRestWithScores): params go to
-            # each fresh binary estimator via the factory hook
-            return self.estimator.with_params(params)
-        est = self.estimator.copy()
-        for k, v in params.items():
-            est.set(est.getParam(k), v)  # in-place; returns None
-        return est
-
     def fit(self, df: DataFrame):
         tagged = df.withColumn(
             "__fold", (F.rand(self.seed) * self.num_folds).cast("int")
@@ -89,7 +79,7 @@ class CrossValidatorWithFoldMetrics:
             p_idx, fold = task
             train = tagged.filter(F.col("__fold") != fold).drop("__fold")
             val = tagged.filter(F.col("__fold") == fold).drop("__fold")
-            model = self._apply_params(self.param_maps[p_idx]).fit(train)
+            model = with_params(self.estimator, self.param_maps[p_idx]).fit(train)
             strip_training_summary(model)
             scored = model.transform(val)
             if self.predict_savepoint_path is not None:
@@ -137,6 +127,6 @@ class CrossValidatorWithFoldMetrics:
 
         tagged.unpersist()
         # refit best on the full data (CrossValidatorCustom.scala:268-306)
-        best = self._apply_params(self.best_params_).fit(df)
+        best = with_params(self.estimator, self.best_params_).fit(df)
         strip_training_summary(best)
         return best

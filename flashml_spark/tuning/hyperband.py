@@ -39,7 +39,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.sql import DataFrame
 
-from flashml_spark.training.estimators import strip_training_summary
+from flashml_spark.training.estimators import strip_training_summary, with_params
 
 from flashml_spark.operators.sampling import stratified_split
 from flashml_spark.tuning.generators import ParamSpace, random_param_sets
@@ -101,18 +101,6 @@ class HyperBand:
                 )
         return rows
 
-    def _apply(self, params: dict, spark_iters: int):
-        if hasattr(self.estimator, "with_params"):
-            # estimator-like ensembles (OneVsRestWithScores): params and the
-            # rung's maxIter budget go to each fresh binary estimator
-            return self.estimator.with_params(params, max_iter=spark_iters)
-        est = self.estimator.copy()
-        for k, v in params.items():
-            est.set(est.getParam(k), v)  # in-place; returns None
-        if est.hasParam("maxIter"):
-            est.set(est.getParam("maxIter"), int(spark_iters))
-        return est
-
     def fit(self, df: DataFrame):
         if self.stratified:
             train, val = stratified_split(df, self.label_col, self.train_size, self.seed)
@@ -142,7 +130,7 @@ class HyperBand:
                 spark_iters = max(1, int(r_i * self.iteration_multiplier))
 
                 def evaluate(params):
-                    model = self._apply(params, spark_iters).fit(train)
+                    model = with_params(self.estimator, params, spark_iters).fit(train)
                     strip_training_summary(model)
                     return evaluator.evaluate(model.transform(val))
 
@@ -163,7 +151,8 @@ class HyperBand:
         train.unpersist()
         val.unpersist()
         self.best_params_ = best_params
-        final = self._apply(best_params, self.max_iterations_final_model)
-        model = final.fit(df)
+        model = with_params(
+            self.estimator, best_params, self.max_iterations_final_model
+        ).fit(df)
         strip_training_summary(model)
         return model

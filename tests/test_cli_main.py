@@ -106,6 +106,40 @@ def test_cli_predict_mode_scores_with_persisted_models(spark, tmp_path):
     assert "prediction" in scored.columns
 
 
+def test_cli_predict_mode_binned_pages(spark, tmp_path):
+    """predict mode on a 3-page config with binning scores every row once."""
+    from pyspark.sql import functions as F
+
+    from flashml_spark.__main__ import main
+
+    raw = str(tmp_path / "raw.parquet")
+    src = str(tmp_path / "input4.parquet")
+    root = str(tmp_path / "sp4")
+    out = str(tmp_path / "scored4.parquet")
+    _write_input(spark, raw)
+    spark.read.parquet(raw).withColumn(
+        "page", F.col("session_id") % 3 + 1
+    ).write.parquet(src)
+    cfg = _base_config(tmp_path, f"parquet://{src}", root)
+    cfg["project"]["data"].update(pageVariable="page", numPages=3)
+    cfg["featuregeneration"] = {
+        "binning": [{"variable": "dwell", "type": "equiarea_exact", "buckets": 3}]
+    }
+    train_cfg = tmp_path / "train4.json"
+    train_cfg.write_text(json.dumps(cfg))
+    assert main([str(train_cfg)]) == 0
+
+    cfg["experiment"] = {"type": "predict"}
+    cfg["predict"] = {"output": out}
+    pred_cfg = tmp_path / "predict4.json"
+    pred_cfg.write_text(json.dumps(cfg))
+    assert main([str(pred_cfg)]) == 0
+
+    scored = spark.read.parquet(out)
+    assert not [c for c in scored.columns if c.endswith("_binned")]
+    assert scored.count() == scored.select("session_id").distinct().count() == 240
+
+
 def test_cli_rejects_invalid_config(tmp_path):
     from flashml_spark.__main__ import main
 

@@ -542,6 +542,51 @@ def test_experiment_predict_only_resume(spark, tmp_path):
     assert len(fresh.models_) == 2
 
 
+@pytest.fixture(scope="module")
+def binned_pages_run(spark, tmp_path_factory):
+    """One training run of a 3-page config with binning and savepoints."""
+    cfg = ExperimentConfig(
+        primary_keys=["session_id"], response="response", text_cols=["text"],
+        categorical_cols=["device"], numerical_cols=["dwell"],
+        binning=[{"variable": "dwell", "type": "equiarea_exact", "buckets": 3}],
+        text_method="hashingtf", slots=32,
+        algorithm="logistic_regression", algo_params={"maxIter": 5},
+        page_col="page", num_pages=3,
+        savepoint_root=str(tmp_path_factory.mktemp("binned_pages")),
+    )
+    Experiment(cfg).run(spark, _journey_df(spark, 300))
+    return cfg
+
+
+def test_experiment_predict_binned_pages_scores_every_row_once(
+    spark, binned_pages_run
+):
+    """Page-qualified binned columns (<var>_page<k>_binned) are dropped per
+    page, so predict unions the pages and scores each input row once."""
+    scored = Experiment(binned_pages_run).predict(
+        spark, _journey_df(spark, 90).drop("response")
+    )
+    assert not [c for c in scored.columns if c.endswith("_binned")]
+    assert scored.count() == 90
+    assert scored.select("session_id").distinct().count() == 90
+
+
+def test_experiment_predict_reproduces_run_scoring(spark, binned_pages_run):
+    """predict on the run's own test split gives the run's scored rows."""
+    from flashml_spark.sources.savepoint import SavepointManager
+
+    cfg = binned_pages_run
+    sp = SavepointManager(spark, cfg.savepoint_root)
+    cols = [*cfg.primary_keys, "page", "prediction", "prediction_label"]
+    got = Experiment(cfg).predict(spark, sp.load("sampling", "test")).select(cols)
+    want = sp.load("scoring", "test", page=0).select(cols)
+    for k in (1, 2):
+        want = want.unionByName(sp.load("scoring", "test", page=k).select(cols))
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_streaming_sliding_window_matches_batch(spark, tmp_path):
     from flashml_spark.operators.events import sliding_window_agg
     from flashml_spark.sources import load_table

@@ -228,6 +228,33 @@ def test_hyperband_fit_executes_schedule(spark):
     assert len(ran) == len(hb.schedule())
 
 
+def test_with_params_sets_a_copy(spark):
+    """The one param setter the tuners share: a param map plus maxIter on
+    a copy; estimators without maxIter ignore it; OVR passes both to every
+    binary estimator its factory builds."""
+    from pyspark.ml.classification import NaiveBayes
+
+    from flashml_spark.training.estimators import with_params
+    from flashml_spark.training.ovr import OneVsRestWithScores
+
+    lr = LogisticRegression(regParam=0.0, maxIter=100)
+    tuned = with_params(lr, {"regParam": 0.3}, max_iter=7)
+    assert tuned is not lr
+    assert (tuned.getRegParam(), tuned.getMaxIter()) == (0.3, 7)
+    assert (lr.getRegParam(), lr.getMaxIter()) == (0.0, 100)
+    assert with_params(lr, {"regParam": 0.3}).getMaxIter() == 100
+
+    nb = with_params(NaiveBayes(), {"smoothing": 2.0}, max_iter=7)
+    assert nb.getSmoothing() == 2.0 and not nb.hasParam("maxIter")
+
+    ovr = OneVsRestWithScores(lambda: LogisticRegression(maxIter=100))
+    factory = with_params(ovr, {"regParam": 0.3}, max_iter=7).base_estimator_factory
+    built = [factory() for _ in range(3)]
+    assert len({id(e) for e in built}) == 3
+    assert all((e.getRegParam(), e.getMaxIter()) == (0.3, 7) for e in built)
+    assert ovr.base_estimator_factory().getMaxIter() == 100
+
+
 def test_hyperband_schedule_parity_reference_defaults():
     """Bracket/rung budget table at the reference defaults (maxHyperbandIter=81,
     eta=3, iterationMultiplier=20) must match HyperBand.scala:200-235's
