@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from flashml_spark.metrics.binary import auroc, best_fbeta_threshold
 from flashml_spark.metrics.multiclass import multiclass_metrics
+from flashml_spark.mlio import save_pipeline
 from flashml_spark.operators import relational, sampling
 from flashml_spark.operators.binning import binning_output_name, binning_specs_for_page
 from flashml_spark.training.estimators import (
@@ -543,8 +544,8 @@ class Experiment:
                     # scored output are byte-identical to this run's.
                     sp.save(tr_v, "vectorization", "train", page=k)
                     sp.save(te, "vectorization", "test", page=k)
-                    prep.write().overwrite().save(
-                        f"{c.savepoint_root}/pipeline/page{k}/prep_pipeline"
+                    save_pipeline(
+                        prep, f"{c.savepoint_root}/pipeline/page{k}/prep_pipeline"
                     )
                     tr_v = sp.load("vectorization", "train", page=k)
                     te = sp.load("vectorization", "test", page=k)
@@ -571,8 +572,8 @@ class Experiment:
                     scored.drop(*[col for col, t in scored.dtypes if t == "vector"]),
                     "scoring", "test", page=k,
                 )
-                full_model.write().overwrite().save(
-                    f"{c.savepoint_root}/pipeline/page{k}/model_pipeline"
+                save_pipeline(
+                    full_model, f"{c.savepoint_root}/pipeline/page{k}/model_pipeline"
                 )
             return scored, full_model, tuning_info
 

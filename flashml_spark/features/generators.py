@@ -11,9 +11,11 @@ from pyspark.ml import Transformer
 from pyspark.ml.feature import NGram
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import HasInputCol, HasOutputCol
-from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
+from pyspark.ml.util import DefaultParamsReadable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flashml_spark.mlio import ParamsWritable
 
 
 def build_ngram_stages(input_col: str, ns: list[int]) -> list[NGram]:
@@ -23,7 +25,7 @@ def build_ngram_stages(input_col: str, ns: list[int]) -> list[NGram]:
 
 
 class SkipGramGenerator(
-    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, ParamsWritable
 ):
     """Skip-gram "AND rules" (``SkipGramGenerator.scala:28-46``): for each
     window size w in 3..windowSize, pair ``first & last`` of every sliding
@@ -68,7 +70,7 @@ class SkipGramGenerator(
 
 
 class GramAssembler(
-    Transformer, HasOutputCol, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, HasOutputCol, DefaultParamsReadable, ParamsWritable
 ):
     """Concatenate the original token array and every gram array into one
     (``GramAssembler.scala:30-36,61-79``) — ``F.concat`` supports arrays."""
@@ -87,7 +89,7 @@ class GramAssembler(
 
 
 class CategoricalConcat(
-    Transformer, HasOutputCol, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, HasOutputCol, DefaultParamsReadable, ParamsWritable
 ):
     """Prefix each categorical value with ``<colName>_`` and collect into a
     single array (``CategoricalColumnsTransformer.scala:29-50``) so the

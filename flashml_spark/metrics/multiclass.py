@@ -13,17 +13,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _pair_counts(scored: DataFrame, label_col: str, prediction_col: str) -> DataFrame:
+    return scored.groupBy(
+        F.col(label_col).alias("label"), F.col(prediction_col).alias("pred")
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
 def confusion_matrix(
     scored: DataFrame, label_col: str = "label", prediction_col: str = "prediction"
 ) -> DataFrame:
     """``label, pred, n`` counts (``StandardMetricsEvaluator.scala:262-267``)."""
-    return (
-        scored.groupBy(
-            F.col(label_col).alias("label"), F.col(prediction_col).alias("pred")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("label", "pred")
-    )
+    return _pair_counts(scored, label_col, prediction_col).orderBy("label", "pred")
 
 
 def multiclass_metrics(
@@ -31,7 +31,8 @@ def multiclass_metrics(
     beta: float = 2.0,
 ) -> dict:
     """accuracy + weighted P/R/F1/F-beta/TPR/FPR + per-class table."""
-    cm = confusion_matrix(scored, label_col, prediction_col).collect()  # tiny
+    # tiny; unordered, since the classes are sorted here
+    cm = _pair_counts(scored, label_col, prediction_col).collect()
     classes = sorted({r["label"] for r in cm} | {r["pred"] for r in cm})
     total = sum(r["n"] for r in cm)
     if total == 0:

@@ -145,7 +145,9 @@ from pyspark import keyword_only  # noqa: E402
 from pyspark.ml import Estimator, Transformer  # noqa: E402
 from pyspark.ml.param import Param, Params, TypeConverters  # noqa: E402
 from pyspark.ml.param.shared import HasInputCol, HasOutputCol  # noqa: E402
-from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable  # noqa: E402
+from pyspark.ml.util import DefaultParamsReadable  # noqa: E402
+
+from flashml_spark.mlio import ParamsWritable  # noqa: E402
 
 BINNING_METHODS = ("equidistant", "equiarea", "equiarea_exact", "intervals")
 
@@ -185,7 +187,7 @@ def binning_specs_for_page(binning: list, page: int) -> list[dict]:
 
 
 class BinningModel(
-    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, ParamsWritable
 ):
     """Fitted binning stage: applies the CASE-chain bucket assignment for
     stored inner split points.  Params-serializable, so a PipelineModel

@@ -9,8 +9,8 @@ splits to ``array<string>``.
 All stages are native column expressions (``F.lower``/``regexp_replace``/
 ``transform`` over the delimiter-split array) — zero Python in the hot path
 except Porter stemming and dictionary substitution, which use Arrow-batched
-pandas UDFs.  Every stage is ``DefaultParamsReadable/Writable`` so fitted
-pipelines round-trip through ``PipelineModel.save/load``.
+pandas UDFs.  Every stage is ``DefaultParamsReadable`` and ``ParamsWritable``
+so fitted pipelines round-trip through ``PipelineModel.save/load``.
 """
 
 from __future__ import annotations
@@ -21,17 +21,19 @@ from pyspark.ml import Transformer
 from pyspark.ml.feature import RegexTokenizer
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import HasInputCol, HasOutputCol
-from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
+from pyspark.ml.util import DefaultParamsReadable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from flashml_spark.mlio import ParamsWritable
 
 # FlashMLConstants.scala:96 — internal token delimiter
 TOKEN_DELIMITER = "~SP~"
 
 
 class _StringStage(
-    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, HasInputCol, HasOutputCol, DefaultParamsReadable, ParamsWritable
 ):
     """Base for String→String stages with in/out col params.
 
@@ -282,7 +284,7 @@ class PorterStemmer(_StringStage):
 
 
 class NullImputer(
-    Transformer, DefaultParamsReadable, DefaultParamsWritable
+    Transformer, DefaultParamsReadable, ParamsWritable
 ):
     """Typed null replacement + indicator column
     (``org/apache/spark/ml/feature/ImputerCustom.scala:61-73``):

@@ -20,6 +20,7 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flashml_spark.mlio import save_pipeline
 from flashml_spark.operators.relational import concat_key
 
 
@@ -34,7 +35,7 @@ def combine_pipeline_models(models: list[PipelineModel]) -> PipelineModel:
 
 def save_full_pipeline(models: list[PipelineModel], path: str) -> PipelineModel:
     combined = combine_pipeline_models(models)
-    combined.write().overwrite().save(path)
+    save_pipeline(combined, path)
     return combined
 
 

@@ -21,12 +21,12 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import (
     DefaultParamsReader,
-    DefaultParamsWriter,
     MLReadable,
     MLReader,
     MLWritable,
     MLWriter,
 )
+from flashml_spark.mlio import write_metadata
 from flashml_spark.training.estimators import strip_training_summary, with_params
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -107,9 +107,7 @@ class _OneVsRestScoresModelWriter(MLWriter):
                 f"{type(m).__module__}.{type(m).__name__}" for m in inst.models
             ],
         }
-        DefaultParamsWriter.saveMetadata(
-            inst, path, self.sparkSession, extraMetadata=extra
-        )
+        write_metadata(inst, path, self.sparkSession, extraMetadata=extra)
         for k, m in enumerate(inst.models):
             m.write().session(self.sparkSession).save(os.path.join(path, f"model_{k}"))
 

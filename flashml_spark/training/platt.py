@@ -27,20 +27,27 @@ from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
+from pyspark.ml.util import DefaultParamsReadable
+from flashml_spark.mlio import ParamsWritable
 from flashml_spark.training.estimators import strip_training_summary
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _fit_sigmoid(margins: DataFrame, margin_col: str, label_col: str) -> tuple[float, float]:
+def _pos_neg(y) -> list:
+    """Aggregates counting the rows with ``y == 1`` and ``y != 1``."""
+    return [
+        F.sum(F.when(y == 1.0, 1).otherwise(0)),
+        F.sum(F.when(y != 1.0, 1).otherwise(0)),
+    ]
+
+
+def _fit_sigmoid(
+    margins: DataFrame, margin_col: str, label_col: str, n_pos: int, n_neg: int
+) -> tuple[float, float]:
     """Fit P(y=1|m) = sigmoid(A·m + B) with Platt's target smoothing via
-    weighted rows.  Returns (A, B)."""
-    counts = margins.agg(
-        F.sum(F.when(F.col(label_col) == 1.0, 1).otherwise(0)).alias("pos"),
-        F.sum(F.when(F.col(label_col) != 1.0, 1).otherwise(0)).alias("neg"),
-    ).first()
-    n_pos, n_neg = counts["pos"], counts["neg"]
+    weighted rows, given the positive and negative row counts.  Returns
+    (A, B)."""
     t_pos = (n_pos + 1.0) / (n_pos + 2.0)
     t_neg = 1.0 / (n_neg + 2.0)
 
@@ -83,14 +90,18 @@ class PlattScalar:
                     for k in range(n_classes)
                 ],
             ).cache()
-            margins.count()
+
+            def y(k: int):
+                return F.when(F.col(self.label_col) == float(k), 1.0).otherwise(0.0)
+
+            # every class's counts in the one pass that fills the cache
+            counts = margins.agg(
+                *[agg for k in range(n_classes) for agg in _pos_neg(y(k))]
+            ).first()
 
             def fit_k(k: int):
-                per_class = margins.select(
-                    F.col(f"__m{k}").alias("m"),
-                    F.when(F.col(self.label_col) == float(k), 1.0).otherwise(0.0).alias("y"),
-                )
-                return _fit_sigmoid(per_class, "m", "y")
+                per_class = margins.select(F.col(f"__m{k}").alias("m"), y(k).alias("y"))
+                return _fit_sigmoid(per_class, "m", "y", counts[2 * k], counts[2 * k + 1])
 
             with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
                 coeffs = list(pool.map(fit_k, range(n_classes)))
@@ -101,16 +112,17 @@ class PlattScalar:
             vector_to_array(F.col(self.raw_col)).getItem(1).alias("m"),
             F.col(self.label_col).alias("y"),
         )
-        coeffs = [_fit_sigmoid(margins, "m", "y")]
+        n_pos, n_neg = margins.agg(*_pos_neg(F.col("y"))).first()
+        coeffs = [_fit_sigmoid(margins, "m", "y", n_pos, n_neg)]
         return PlattScalarModel(coeffs, raw_col=self.raw_col)
 
 
-class PlattScalarModel(Transformer, DefaultParamsReadable, DefaultParamsWritable):
+class PlattScalarModel(Transformer, DefaultParamsReadable, ParamsWritable):
     """Transformer: margins → calibrated ``probability`` (array<double>),
     argmax → ``prediction`` (SVM's own prediction kept as
     ``svm_prediction``, ``PlattScalar.scala:363-399``).
 
-    A real :class:`pyspark.ml.Transformer` with ``DefaultParamsWritable``
+    A real :class:`pyspark.ml.Transformer` with ``ParamsWritable``
     persistence (coefficients are plain params), so the calibrator
     round-trips through ``PipelineModel.save``/``load`` exactly like the
     reference's ``PlattScalarModel`` (``PlattScalar.scala:363-399``

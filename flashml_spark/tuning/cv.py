@@ -16,13 +16,19 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.sql import DataFrame
 
+from flashml_spark.metrics.multiclass import multiclass_metrics
 from flashml_spark.training.estimators import strip_training_summary, with_params
 from pyspark.sql import functions as F
 
-FOLD_METRICS = ("accuracy", "weightedPrecision", "weightedRecall", "f1")
+# fold metric (Spark evaluator name) -> its multiclass_metrics key
+FOLD_METRICS = {
+    "accuracy": "accuracy",
+    "weightedPrecision": "weightedPrecision",
+    "weightedRecall": "weightedRecall",
+    "f1": "weightedF1",
+}
 
 
 class CrossValidatorWithFoldMetrics:
@@ -56,11 +62,6 @@ class CrossValidatorWithFoldMetrics:
         self.best_index_: int | None = None
         self.best_params_: dict | None = None
 
-    def _evaluator(self, metric: str) -> MulticlassClassificationEvaluator:
-        return MulticlassClassificationEvaluator(
-            labelCol=self.label_col, predictionCol="prediction", metricName=metric
-        )
-
     def fit(self, df: DataFrame):
         tagged = df.withColumn(
             "__fold", (F.rand(self.seed) * self.num_folds).cast("int")
@@ -86,9 +87,9 @@ class CrossValidatorWithFoldMetrics:
                 # lazy plan over the fitted model — writing later re-runs only
                 # the transform, never the fit
                 scored_frames[(p_idx, fold)] = scored
-            row = {
-                m: self._evaluator(m).evaluate(scored) for m in FOLD_METRICS
-            }
+            # one confusion-matrix collect gives all four metrics
+            metrics = multiclass_metrics(scored, self.label_col, "prediction")
+            row = {m: metrics[key] for m, key in FOLD_METRICS.items()}
             row.update(param_index=p_idx, fold=fold)
             return row
 
