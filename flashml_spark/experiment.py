@@ -554,9 +554,7 @@ class Experiment:
             scored = model.transform(te)  # te: already vectorized
             tail = [model]
             if use_platt:
-                calibrator = PlattScalar(
-                    label_col=label_col, parallelism=c.parallelism
-                ).fit(model.transform(tr_v))
+                calibrator = PlattScalar(label_col=label_col).fit(model.transform(tr_v))
                 scored = calibrator.transform(scored)
                 # the calibrator is part of the persisted pipeline so that
                 # predict-only resume reproduces calibrated probabilities

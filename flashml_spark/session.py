@@ -26,8 +26,12 @@ def get_spark(
     Scale posture: AQE enabled so the 100 TB plan re-partitions at runtime
     (coalesce small shuffle partitions, split skewed ones); explicit
     shuffle-partition default only as the pre-AQE starting point.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the cores this
+    process may run on, so an unconfigured session never oversubscribes
+    its host.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

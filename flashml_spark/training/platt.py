@@ -1,68 +1,94 @@
 """Platt scaling — calibrate SVM margins into probabilities.
 
-Reference: ``org/apache/spark/ml/classification/PlattScalar.scala`` fits a
-1-feature binary logistic regression on the margin with Platt's smoothed
-FRACTIONAL targets t+ = (N+ + 1)/(N+ + 2), t- = 1/(N- + 2), which required
-a forked LR accepting double labels
-(``BinaryLogisticRegressionWithDoubleResponse.scala``).
+Reference: ``org/apache/spark/ml/classification/PlattScalar.scala`` fits,
+per class, a 1-feature binary logistic regression P(y=1|m) = sigmoid(A·m +
+B) on the margin m with Platt's smoothed FRACTIONAL targets
+t+ = (N+ + 1)/(N+ + 2), t- = 1/(N- + 2), which required a forked LR
+accepting double labels (``BinaryLogisticRegressionWithDoubleResponse
+.scala``).
 
-PySpark has no fractional-label LR; we use the mathematically identical
-**weighted-row reformulation**: a row with fractional target t contributes
-the log-likelihood  t·log p + (1-t)·log(1-p)  — exactly the likelihood of
-two rows (label 1, weight t) and (label 0, weight 1-t).  So each scored row
-is duplicated into a positive and negative copy with those weights and a
-stock ``LogisticRegression(weightCol=...)`` fits A·m + B by MLE.  No fork,
-same optimum.
+Here every class is fitted in ONE Spark query: a long frame of
+``(k, m, y)`` rows (``posexplode`` of the OVR ``class_scores`` array, or
+``k = 0`` and ``m = rawPrediction[1]`` for a binary model) is grouped by
+class, and each group minimizes the same fractional-label log-loss with
+Newton's method and a backtracking line search (Lin, Lin & Weng 2007, the
+solver LIBSVM uses for Platt scaling).  Same objective, so the same MLE
+as the reference, without one distributed LR — and its dozens of Spark
+jobs — per class.  Each group sorts its rows by ``(m, y)`` before summing,
+so A and B do not depend on row order or partitioning.
 
-Per-class fits run concurrently (driver thread pool) for OVR models
-(``PlattScalar.scala:388-399``).
+Scale note: one class's ``(m, y)`` margins (16 B per training row) sit in
+ONE Python worker — fine into the ~10^8 rows/class range, a cliff beyond.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import math
 
+import numpy as np
+import pandas as pd
 from pyspark.ml import Transformer
-from pyspark.ml.classification import LogisticRegression
-from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import DefaultParamsReadable
 from flashml_spark.mlio import ParamsWritable
-from flashml_spark.training.estimators import strip_training_summary
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _pos_neg(y) -> list:
-    """Aggregates counting the rows with ``y == 1`` and ``y != 1``."""
-    return [
-        F.sum(F.when(y == 1.0, 1).otherwise(0)),
-        F.sum(F.when(y != 1.0, 1).otherwise(0)),
-    ]
+_MAX_ITER = 100
+_MIN_STEP = 1e-10
+_RIDGE = 1e-12
+_ARMIJO = 1e-4
+_GRAD_TOL = 1e-10  # per training row, on the gradient's infinity norm
 
 
-def _fit_sigmoid(
-    margins: DataFrame, margin_col: str, label_col: str, n_pos: int, n_neg: int
-) -> tuple[float, float]:
-    """Fit P(y=1|m) = sigmoid(A·m + B) with Platt's target smoothing via
-    weighted rows, given the positive and negative row counts.  Returns
-    (A, B)."""
-    t_pos = (n_pos + 1.0) / (n_pos + 2.0)
-    t_neg = 1.0 / (n_neg + 2.0)
+def _platt_loss(a: float, b: float, m: np.ndarray, t: np.ndarray) -> float:
+    """Fractional-label log-loss  sum log(1 + e^z) - t·z,  z = a·m + b."""
+    z = a * m + b
+    return float(np.sum(np.logaddexp(0.0, z) - t * z))
 
-    t = F.when(F.col(label_col) == 1.0, F.lit(t_pos)).otherwise(F.lit(t_neg))
-    base = margins.select(F.col(margin_col).alias("m"), t.alias("t"))
-    doubled = base.select("m", F.lit(1.0).alias("y"), F.col("t").alias("w")).unionAll(
-        base.select("m", F.lit(0.0).alias("y"), (1.0 - F.col("t")).alias("w"))
-    )
-    assembled = VectorAssembler(inputCols=["m"], outputCol="f").transform(doubled)
-    lr = LogisticRegression(
-        featuresCol="f", labelCol="y", weightCol="w", tol=1e-6, regParam=0.0, maxIter=100
-    )
-    model = lr.fit(assembled)
-    strip_training_summary(model)
-    return float(model.coefficients[0]), float(model.intercept)
+
+def _fit_sigmoid(m: np.ndarray, y: np.ndarray) -> tuple[float, float]:
+    """Fit P(y=1|m) = sigmoid(A·m + B) to one class's margins with Platt's
+    smoothed targets; returns (A, B).  ``y`` is 1.0 for the class's rows
+    and 0.0 otherwise.  NaN coefficients if any margin is non-finite."""
+    if not np.isfinite(m).all():
+        return math.nan, math.nan
+    order = np.lexsort((y, m))
+    m, y = m[order], y[order]
+    n_pos = int(np.count_nonzero(y == 1.0))
+    n_neg = len(y) - n_pos
+    t = np.where(y == 1.0, (n_pos + 1.0) / (n_pos + 2.0), 1.0 / (n_neg + 2.0))
+    a, b = 0.0, math.log((n_pos + 1.0) / (n_neg + 1.0))
+    loss = _platt_loss(a, b, m, t)
+    for _ in range(_MAX_ITER):
+        z = a * m + b
+        p = np.exp(-np.logaddexp(0.0, -z))  # sigmoid(z), no overflow
+        r = p - t
+        g = np.array([np.dot(r, m), np.sum(r)])
+        if np.max(np.abs(g)) <= _GRAD_TOL * len(m):
+            break
+        w = p * (1.0 - p)
+        wm = np.dot(w, m)
+        h = np.array([[np.dot(w, m * m), wm], [wm, np.sum(w)]]) + _RIDGE * np.eye(2)
+        d = -np.linalg.solve(h, g)
+        descent = float(g @ d)
+        step = 1.0
+        while step >= _MIN_STEP:
+            a_new, b_new = a + step * d[0], b + step * d[1]
+            new_loss = _platt_loss(a_new, b_new, m, t)
+            if new_loss <= loss + _ARMIJO * step * descent:
+                a, b, loss = a_new, b_new, new_loss
+                break
+            step /= 2.0
+        else:  # no step decreases the loss: at the optimum to float precision
+            break
+    return float(a), float(b)
+
+
+def _fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    a, b = _fit_sigmoid(pdf["m"].to_numpy(dtype=float), pdf["y"].to_numpy(dtype=float))
+    return pd.DataFrame({"k": [int(pdf["k"].iloc[0])], "a": [a], "b": [b]})
 
 
 class PlattScalar:
@@ -70,51 +96,50 @@ class PlattScalar:
 
     ``fit(scored_train)`` expects either a binary model's ``rawPrediction``
     vector column, or an OVR ``class_scores`` array column (one margin per
-    class).  Returns a PlattScalarModel.
+    class).  Returns a PlattScalarModel.  Every class is fitted in one
+    Spark query (a grouped Newton solve, see the module docstring).
     """
 
     def __init__(self, label_col: str = "label", raw_col: str = "rawPrediction",
-                 scores_col: str = "class_scores", parallelism: int = 6):
+                 scores_col: str = "class_scores"):
         self.label_col = label_col
         self.raw_col = raw_col
         self.scores_col = scores_col
-        self.parallelism = parallelism
 
     def fit(self, scored: DataFrame) -> "PlattScalarModel":
-        if self.scores_col in scored.columns:
-            n_classes = len(scored.select(self.scores_col).first()[0])
-            margins = scored.select(
-                self.label_col,
-                *[
-                    F.col(self.scores_col).getItem(k).alias(f"__m{k}")
-                    for k in range(n_classes)
-                ],
-            ).cache()
-
-            def y(k: int):
-                return F.when(F.col(self.label_col) == float(k), 1.0).otherwise(0.0)
-
-            # every class's counts in the one pass that fills the cache
-            counts = margins.agg(
-                *[agg for k in range(n_classes) for agg in _pos_neg(y(k))]
-            ).first()
-
-            def fit_k(k: int):
-                per_class = margins.select(F.col(f"__m{k}").alias("m"), y(k).alias("y"))
-                return _fit_sigmoid(per_class, "m", "y", counts[2 * k], counts[2 * k + 1])
-
-            with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
-                coeffs = list(pool.map(fit_k, range(n_classes)))
-            margins.unpersist()
-            return PlattScalarModel(coeffs, scores_col=self.scores_col)
-
-        margins = scored.select(
-            vector_to_array(F.col(self.raw_col)).getItem(1).alias("m"),
-            F.col(self.label_col).alias("y"),
+        label = F.col(self.label_col)
+        ovr = self.scores_col in scored.columns
+        if ovr:
+            long = scored.select(
+                F.posexplode(self.scores_col).alias("k", "m"), label.alias("__label")
+            )
+            y = F.col("__label") == F.col("k")
+        else:
+            long = scored.select(
+                F.lit(0).alias("k"),
+                vector_to_array(F.col(self.raw_col)).getItem(1).alias("m"),
+                label.alias("__label"),
+            )
+            y = F.col("__label") == 1.0
+        long = long.select(
+            "k", F.col("m").cast("double"), F.when(y, 1.0).otherwise(0.0).alias("y")
         )
-        n_pos, n_neg = margins.agg(*_pos_neg(F.col("y"))).first()
-        coeffs = [_fit_sigmoid(margins, "m", "y", n_pos, n_neg)]
-        return PlattScalarModel(coeffs, raw_col=self.raw_col)
+        rows = sorted(
+            long.groupBy("k")
+            .applyInPandas(_fit_group, "k int, a double, b double")
+            .collect()
+        )
+        if not rows:
+            raise ValueError("PlattScalar.fit needs at least one scored row")
+        # a NaN coefficient comes back as null through Arrow
+        bad = [r.k for r in rows
+               if not all(v is not None and math.isfinite(v) for v in (r.a, r.b))]
+        if bad:
+            raise ValueError(f"PlattScalar.fit: non-finite margin for class(es) {bad}")
+        sigmoids = [(r.a, r.b) for r in rows]
+        if ovr:
+            return PlattScalarModel(sigmoids, scores_col=self.scores_col)
+        return PlattScalarModel(sigmoids, raw_col=self.raw_col)
 
 
 class PlattScalarModel(Transformer, DefaultParamsReadable, ParamsWritable):

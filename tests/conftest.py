@@ -47,6 +47,18 @@ def normalize(rows, ndigits=6):
     return sorted(tuple(canon(v) for v in row) for row in rows)
 
 
+def jobs_started(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts, from the context's job-id
+    high-water mark before and after the call.  Job ids are sequential
+    across threads, so jobs started from ``fn``'s own thread pools count
+    too (a job-group count misses them: pool threads do not inherit the
+    caller's group)."""
+    next_job_id = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    before = next_job_id()
+    fn()
+    return next_job_id() - before
+
+
 def assert_frames_match(spark_df, ddb_con, sql, ndigits=6):
     """Compare a Spark DataFrame against a DuckDB oracle query: column
     names (sorted), row count, and order-insensitive values."""

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import math
+import random
+
+import numpy as np
 import pytest
 from pyspark.ml import Pipeline
 from pyspark.sql import functions as F
@@ -22,6 +26,7 @@ from flashml_spark.training.postprocess import (
     uplift_transform,
 )
 from flashml_spark.vectorization import build_assembler, build_text_vectorizer
+from tests.conftest import jobs_started
 
 
 def test_skipgram(spark):
@@ -597,6 +602,131 @@ def test_multiclass_metrics_empty_frame(spark):
     empty = spark.createDataFrame([], "label double, prediction double")
     m = multiclass_metrics(empty)
     assert m["accuracy"] == 0.0 and m["weightedF1"] == 0.0 and m["perClass"] == {}
+
+
+def _margin_rows(n_classes: int, n: int = 400, seed: int = 5, labels=None):
+    """Deterministic noisy margins: ``(label, class_scores)`` rows whose
+    own-class margin sits higher; ``labels`` overrides the i % k labels."""
+    rnd = random.Random(seed)
+    rows = []
+    for i in range(n):
+        label = float(labels[i] if labels is not None else i % n_classes)
+        scores = [rnd.gauss(1.2 if k == label else -0.8, 1.0) for k in range(n_classes)]
+        rows.append((label, scores))
+    return rows
+
+
+def _ovr_scored(spark, rows):
+    return spark.createDataFrame(rows, "label double, class_scores array<double>")
+
+
+def _binary_scored(spark, rows):
+    """A binary model's scored frame: class 1's margin m in
+    ``rawPrediction = [-m, m]``."""
+    from pyspark.ml.linalg import Vectors
+
+    return spark.createDataFrame(
+        [(label, Vectors.dense([-s[1], s[1]])) for label, s in rows],
+        ["label", "rawPrediction"],
+    )
+
+
+def _class_margins(rows, k: int, binary: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Class ``k``'s margins and 0/1 targets, as the calibrator sees them."""
+    m = np.array([s[1] if binary else s[k] for _, s in rows])
+    y = np.array([1.0 if label == (1.0 if binary else k) else 0.0 for label, _ in rows])
+    return m, y
+
+
+def _weighted_lr_reference(spark, m: np.ndarray, y: np.ndarray) -> tuple[float, float]:
+    """Platt's fractional-label fit as duplicated weighted rows through a
+    stock ``LogisticRegression(weightCol)``: a row with target t is a
+    (label 1, weight t) row plus a (label 0, weight 1 - t) row."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    n_pos = int(y.sum())
+    n_neg = len(y) - n_pos
+    t_pos, t_neg = (n_pos + 1.0) / (n_pos + 2.0), 1.0 / (n_neg + 2.0)
+    rows = []
+    for mi, yi in zip(m.tolist(), y.tolist()):
+        t = t_pos if yi == 1.0 else t_neg
+        rows += [(Vectors.dense([mi]), 1.0, t), (Vectors.dense([mi]), 0.0, 1.0 - t)]
+    doubled = spark.createDataFrame(rows, ["f", "y", "w"])
+    lr = LogisticRegression(
+        featuresCol="f", labelCol="y", weightCol="w", tol=1e-10, regParam=0.0, maxIter=200
+    ).fit(doubled)
+    return float(lr.coefficients[0]), float(lr.intercept)
+
+
+def _platt_gradient(a: float, b: float, m: np.ndarray, y: np.ndarray) -> np.ndarray:
+    n_pos = y.sum()
+    t = np.where(y == 1.0, (n_pos + 1.0) / (n_pos + 2.0), 1.0 / (len(y) - n_pos + 2.0))
+    r = 1.0 / (1.0 + np.exp(-(a * m + b))) - t
+    return np.array([np.dot(r, m), r.sum()])
+
+
+@pytest.mark.parametrize("binary", [True, False], ids=["binary", "ovr4"])
+def test_platt_newton_matches_weighted_lr_and_zeroes_the_gradient(spark, binary):
+    """The grouped Newton solve reaches the optimum of the weighted-row
+    LogisticRegression formulation (same objective, so the same MLE), and
+    Platt's gradient at its (A, B) is zero to 1e-8 per row."""
+    rows = _margin_rows(2 if binary else 4)
+    scored = _binary_scored(spark, rows) if binary else _ovr_scored(spark, rows)
+    sigmoids = PlattScalar(label_col="label").fit(scored).sigmoids
+    assert len(sigmoids) == (1 if binary else 4)
+    for k, (a, b) in enumerate(sigmoids):
+        m, y = _class_margins(rows, k, binary)
+        ref_a, ref_b = _weighted_lr_reference(spark, m, y)
+        assert a == pytest.approx(ref_a, rel=1e-5)
+        assert b == pytest.approx(ref_b, rel=1e-5)
+        assert np.abs(_platt_gradient(a, b, m, y)).max() <= 1e-8 * len(m)
+
+
+def test_platt_fit_is_partition_invariant_and_one_query(spark):
+    """The same scored frame in 1, 3 or 8 partitions gives bit-identical
+    coefficients, and a 4-class fit starts at most 2 Spark jobs (the
+    per-class LogisticRegression fits it replaces started dozens)."""
+    scored = _ovr_scored(spark, _margin_rows(4, n=600, seed=9))
+    fits = {
+        n: PlattScalar(label_col="label").fit(scored.repartition(n)).sigmoids
+        for n in (1, 3, 8)
+    }
+    assert fits[1] == fits[3] == fits[8]
+    cached = scored.repartition(3).cache()
+    cached.count()
+    try:
+        assert jobs_started(spark, lambda: PlattScalar(label_col="label").fit(cached)) <= 2
+    finally:
+        cached.unpersist()
+
+
+@pytest.mark.parametrize("binary", [True, False], ids=["binary", "ovr"])
+def test_platt_fit_rejects_empty_and_non_finite_margins(spark, binary):
+    rows = _margin_rows(2, n=40)
+    make = _binary_scored if binary else _ovr_scored
+    empty = make(spark, rows).limit(0)
+    with pytest.raises(ValueError, match="at least one scored row"):
+        PlattScalar(label_col="label").fit(empty)
+    for bad in (math.nan, math.inf):
+        broken = [(label, [s[0], bad if i == 7 else s[1]]) for i, (label, s) in enumerate(rows)]
+        with pytest.raises(ValueError, match="non-finite margin"):
+            PlattScalar(label_col="label").fit(make(spark, broken))
+
+
+@pytest.mark.parametrize("binary", [True, False], ids=["binary", "ovr"])
+def test_platt_fit_one_sided_classes_get_finite_coefficients(spark, binary):
+    """A class with no positive rows, and one with only positive rows,
+    still get finite A and B: Platt's smoothed targets keep the optimum
+    finite (all-equal targets t give A = 0, B = logit(t))."""
+    make = _binary_scored if binary else _ovr_scored
+    for label in (0, 1):
+        rows = _margin_rows(2, n=50, labels=[label] * 50)
+        sigmoids = PlattScalar(label_col="label").fit(make(spark, rows)).sigmoids
+        for k, (a, b) in enumerate(sigmoids):
+            assert math.isfinite(a) and math.isfinite(b)
+            m, y = _class_margins(rows, k, binary)
+            assert np.abs(_platt_gradient(a, b, m, y)).max() <= 1e-8 * len(m)
 
 
 def test_plain_fit_path_strips_training_summary(spark):

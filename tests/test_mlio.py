@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 import re
-import uuid
 from pathlib import Path
 
 import pytest
@@ -39,19 +38,7 @@ from flashml_spark.preprocessing.transformers import (
 )
 from flashml_spark.training.ovr import OneVsRestWithScores
 from flashml_spark.training.platt import PlattScalarModel
-
-
-def _jobs_started(spark, fn) -> int:
-    """How many Spark jobs ``fn()`` starts, counted in a job group of its own."""
-    sc = spark.sparkContext
-    group = f"mlio-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "mlio job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import jobs_started
 
 
 def _metadata(path: str) -> dict:
@@ -95,10 +82,10 @@ def _python_stages() -> list:
 def test_python_pipeline_save_starts_no_spark_job(spark, tmp_path):
     model = PipelineModel(_python_stages())
     path = str(tmp_path / "py_pipeline")
-    assert _jobs_started(spark, lambda: save_pipeline(model, path)) == 0
+    assert jobs_started(spark, lambda: save_pipeline(model, path)) == 0
     # the stock writer runs one job per metadata write, so the count can see one
     stock = str(tmp_path / "stock_stage")
-    assert _jobs_started(
+    assert jobs_started(
         spark, lambda: DefaultParamsWriter(model.stages[0]).save(stock)
     ) == 1
 
