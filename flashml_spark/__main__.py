@@ -38,15 +38,6 @@ import sys
 from typing import Any
 
 
-def _dotted_get(raw: dict, dotted: str, default: Any = None) -> Any:
-    cur: Any = raw
-    for part in dotted.split("."):
-        if not isinstance(cur, dict) or part not in cur:
-            return default
-        cur = cur[part]
-    return cur
-
-
 def _run_monitoring(spark, raw: dict, new_df) -> int:
     """The reference's model-health job type (``psivsi_config.json`` /
     ``ModelHealthMetricsEvaluator.scala:43-210``): PSI between the base
@@ -81,11 +72,12 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
     drift (PSI), category churn (VSI), cardinality drift (HLL), and
     hot-key churn (CMS) together.
     """
+    from flashml_spark.config import get_path
     from flashml_spark.metrics import stability
     from flashml_spark.operators import sketches
     from flashml_spark.sources.readers import read_source
 
-    base_uri = _dotted_get(raw, "monitoring.baseSource")
+    base_uri = get_path(raw, "monitoring.baseSource")
     if base_uri is None or new_df is None:
         print(
             "invalid config: monitoring needs monitoring.baseSource and "
@@ -94,11 +86,11 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
         )
         return 2
     base = read_source(spark, base_uri)
-    score_col = _dotted_get(raw, "monitoring.scoreColumn")
-    buckets = int(_dotted_get(raw, "monitoring.buckets", 10))
-    cats = _dotted_get(raw, "monitoring.categoricalVariables") or []
-    page_col = _dotted_get(raw, "project.data.pageVariable")
-    num_pages = int(_dotted_get(raw, "project.data.numPages", 1))
+    score_col = get_path(raw, "monitoring.scoreColumn")
+    buckets = int(get_path(raw, "monitoring.buckets", 10))
+    cats = get_path(raw, "monitoring.categoricalVariables") or []
+    page_col = get_path(raw, "project.data.pageVariable")
+    num_pages = int(get_path(raw, "project.data.numPages", 1))
 
     report: dict[str, Any] = {}
     if score_col:
@@ -116,7 +108,7 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
     for var in cats:
         report[f"vsi.{var}"] = stability.vsi(base, new_df, var)
 
-    for var in _dotted_get(raw, "monitoring.cardinalityVariables") or []:
+    for var in get_path(raw, "monitoring.cardinalityVariables") or []:
         b = sketches.hll_cardinality(base, var)
         n = sketches.hll_cardinality(new_df, var)
         report[f"cardinality.{var}"] = {
@@ -125,8 +117,8 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
             "ratio": round(n / b, 6) if b else None,
         }
 
-    hh_k = int(_dotted_get(raw, "monitoring.heavyHitterK", 10))
-    for var in _dotted_get(raw, "monitoring.heavyHitterVariables") or []:
+    hh_k = int(get_path(raw, "monitoring.heavyHitterK", 10))
+    for var in get_path(raw, "monitoring.heavyHitterVariables") or []:
         base_top = {
             r["value"]
             for r in sketches.count_min_audit(base, var, top_k=hh_k).collect()
@@ -141,7 +133,7 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
             for r in sketches.count_min_audit(new_df, var, top_k=hh_k).collect()
         ]
 
-    tl = _dotted_get(raw, "monitoring.timeline")
+    tl = get_path(raw, "monitoring.timeline")
     if tl:
         series = stability.psi_timeline(
             new_df,
@@ -154,7 +146,7 @@ def _run_monitoring(spark, raw: dict, new_df) -> int:
             {"d": str(r["d"]), "n": r["n"], "psi": r["psi"]} for r in series
         ]
 
-    root = _dotted_get(raw, "savepoint.root")
+    root = get_path(raw, "savepoint.root")
     if root:
         import os
 
@@ -182,7 +174,7 @@ def main(argv: list[str] | None = None) -> int:
     with open(args.config) as f:
         raw = json.load(f)
 
-    from flashml_spark.config import ConfigValidationError, load_config
+    from flashml_spark.config import ConfigValidationError, get_path, load_config
 
     try:
         cfg = load_config(raw)
@@ -190,10 +182,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"invalid config: {e}", file=sys.stderr)
         return 2
 
-    source = _dotted_get(raw, "project.data.location.source") or _dotted_get(
+    source = get_path(raw, "project.data.location.source") or get_path(
         raw, "project.data.source"
     )
-    mode = _dotted_get(raw, "experiment.type", "model")
+    mode = get_path(raw, "experiment.type", "model")
     if source is None and args.resume_from is None:
         print(
             "invalid config: project.data.location.source is required "
@@ -205,12 +197,12 @@ def main(argv: list[str] | None = None) -> int:
     from flashml_spark.experiment import Experiment
     from flashml_spark.session import get_spark
 
-    master = _dotted_get(raw, "flashml.context")
+    master = get_path(raw, "flashml.context")
     extra = {"spark.master": master} if master else None
     spark = get_spark(
-        _dotted_get(raw, "project.id", "flashml-spark"), extra_conf=extra
+        get_path(raw, "project.id", "flashml-spark"), extra_conf=extra
     )
-    log_level = _dotted_get(raw, "project.logLevel")
+    log_level = get_path(raw, "project.logLevel")
     if log_level:
         spark.sparkContext.setLogLevel(log_level)
 
@@ -219,9 +211,9 @@ def main(argv: list[str] | None = None) -> int:
         from flashml_spark.sources.readers import read_source, run_sql_view_chain
 
         df = read_source(spark, source)
-        queries = _dotted_get(raw, "project.data.location.queries") or []
+        queries = get_path(raw, "project.data.location.queries") or []
         if queries:
-            prefix = _dotted_get(
+            prefix = get_path(
                 raw, "project.data.location.temp_table_prefix", "flashml_table_"
             )
             df.createOrReplaceTempView(f"{prefix}in")
@@ -233,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
     exp = Experiment(cfg)
     if mode == "predict":
         scored = exp.predict(spark, df)
-        out = _dotted_get(raw, "predict.output")
+        out = get_path(raw, "predict.output")
         if out:
             scored.drop(
                 *[c for c, t in scored.dtypes if t == "vector"]

@@ -109,12 +109,12 @@ _KEY_MAP = {
 _MISSING = object()
 
 
-def _get_path(d: dict, dotted: str):
-    """The value at a dotted path in a nested dict, or _MISSING."""
+def get_path(d: dict, dotted: str, default: Any = None) -> Any:
+    """The value at a dotted path in a nested dict, or ``default``."""
     cur = d
     for part in dotted.split("."):
         if not isinstance(cur, dict) or part not in cur:
-            return _MISSING
+            return default
         cur = cur[part]
     return cur
 
@@ -308,7 +308,7 @@ def load_config(source: str | dict) -> ExperimentConfig:
         # algorithm param and tuning grid (caught round 5 when a
         # regParam=100 CV config reproduced the untuned goldens
         # bit-for-bit)
-        val = _get_path(raw, dotted)
+        val = get_path(raw, dotted, _MISSING)
         if val is not _MISSING:
             kwargs[field_name] = val
     if kwargs.get("algorithm") == "decision_trees":

@@ -20,6 +20,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml.classification import OneVsRestModel
 from pyspark.ml.feature import RegexTokenizer
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -33,7 +34,8 @@ from flashml_spark.operators.binning import binning_output_name, binning_specs_f
 from flashml_spark.training.estimators import (
     build_estimator,
     build_label_indexer,
-    strip_training_summary,
+    build_param_grid,
+    fit,
 )
 from flashml_spark.training.platt import PlattScalar, PlattScalarModel
 from flashml_spark.training.postprocess import (
@@ -276,52 +278,26 @@ class Experiment:
     # ---- modelling: plain fit, OVR, grid-CV, or HyperBand ----------------
     def _fit_model(self, train_vec: DataFrame, label_col: str, page: int = 0):
         c = self.config
+        est = build_estimator(
+            c.algorithm, label_col=label_col, params=c.algo_params, train_df=train_vec,
+        )
         if c.multi_intent and c.algorithm == "svm":
-            # LinearSVC is binary-only: multi-intent SVM goes through OVR
-            # with per-class margin retention (feeds multiclass Platt).
-            # The ensemble flows into the SAME tuning branches below —
-            # grid-CV / HyperBand wrap the whole OVR fit via with_params
-            # (the reference's multiIntent_svm_cv / _hyperband scenarios,
-            # CrossValidatorCustom.scala:124-306); a user's tuning block
-            # is never silently ignored.
+            # LinearSVC is binary-only: multi-intent SVM goes through OVR,
+            # whose rawPrediction keeps every class's margin (feeds
+            # multiclass Platt).  The ensemble flows into the SAME tuning
+            # branches below — grid-CV / HyperBand tune its classifier via
+            # with_params (the reference's multiIntent_svm_cv / _hyperband
+            # scenarios, CrossValidatorCustom.scala:124-306); a user's
+            # tuning block is never silently ignored.
             from flashml_spark.training.ovr import OneVsRestWithScores
 
-            def factory():
-                return build_estimator(
-                    c.algorithm, label_col="__ovr_label", params=c.algo_params
-                )
-
             est = OneVsRestWithScores(
-                factory, label_col=label_col, parallelism=c.parallelism
-            )
-        else:
-            est = build_estimator(
-                c.algorithm, label_col=label_col, params=c.algo_params,
-                train_df=train_vec,
+                classifier=est, labelCol=label_col, parallelism=c.parallelism
             )
         if c.tuning == "cv":
-            import itertools
-
             from flashml_spark.tuning.cv import CrossValidatorWithFoldMetrics
 
-            grid_spec = dict(c.param_grid)
-            # the reference grids MLP hidden layers as "intermediateLayers"
-            # ([[4,4],[5,5]] — multiIntent_mlp_cv_test_config.json /
-            # ModelTrainingUtils.scala:341-361); the Spark param is the FULL
-            # layer spec, so wrap each hidden spec with the input dim and
-            # class count the base estimator already sniffed from the data
-            for alias in ("intermediateLayers", "hiddenLayers"):
-                if c.algorithm == "multilayer_perceptron" and alias in grid_spec:
-                    full = est.getLayers()
-                    grid_spec["layers"] = [
-                        [int(full[0]), *map(int, h), int(full[-1])]
-                        for h in grid_spec.pop(alias)
-                    ]
-            names = sorted(grid_spec)
-            grid = [
-                dict(zip(names, vals))
-                for vals in itertools.product(*[grid_spec[n] for n in names])
-            ] or [{}]
+            grid = build_param_grid(est, c.param_grid)
             savepoint_path = cols = None
             if c.cv_predict_savepoint:
                 if not c.savepoint_root:
@@ -373,12 +349,7 @@ class Experiment:
             return model, {"history": hb.history_, "bestParams": hb.best_params_}
         if c.tuning != "none":
             raise ValueError(f"unknown tuning mode {c.tuning!r}")
-        model = est.fit(train_vec)
-        # keep model closures session-free (same hygiene as the OVR path;
-        # caught live: titanic golden failed whenever DataFrame.observe had
-        # initialized the session's ObservationManager earlier in the JVM)
-        strip_training_summary(model)
-        return model, None
+        return fit(est, train_vec), None
 
     @staticmethod
     def _indexer_labels(pipeline: PipelineModel) -> list[str] | None:
@@ -554,7 +525,10 @@ class Experiment:
             scored = model.transform(te)  # te: already vectorized
             tail = [model]
             if use_platt:
-                calibrator = PlattScalar(label_col=label_col).fit(model.transform(tr_v))
+                # an OVR model's rawPrediction holds one margin per class
+                calibrator = PlattScalar(
+                    label_col=label_col, per_class=isinstance(model, OneVsRestModel)
+                ).fit(model.transform(tr_v))
                 scored = calibrator.transform(scored)
                 # the calibrator is part of the persisted pipeline so that
                 # predict-only resume reproduces calibrated probabilities

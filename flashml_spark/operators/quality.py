@@ -130,12 +130,9 @@ def fit_quality_classifier(
         maxIter=max_iter,
         regParam=reg_param,
     )
-    from flashml_spark.training.estimators import strip_training_summary
+    from flashml_spark.training.estimators import fit
 
-    model = lr.fit(tf.transform(train))
-    # fit-site convention (test_observe): drop the session-pinning
-    # trainingSummary so the model never poisons later task closures
-    strip_training_summary(model)
+    model = fit(lr, tf.transform(train))
     return {
         "weights": [float(w) for w in model.coefficients],
         "intercept": float(model.intercept),

@@ -1,11 +1,14 @@
 """Estimator factory (SURVEY §2.9, ``core/modeltraining/ModelTrainingUtils.scala``).
 
 Seven algorithms with the reference's defaults (seed 999 everywhere a seed
-applies — ``ModelTrainingEngine.scala:31``); param-grid builders for tuning
-(``ModelTrainingUtils.scala:79-174``).
+applies — ``ModelTrainingEngine.scala:31``); the param-grid builder for
+tuning (``ModelTrainingUtils.scala:79-174``); and the one fit path every
+fitted model goes through (``fit``).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.ml.classification import (
     DecisionTreeClassifier,
@@ -17,7 +20,6 @@ from pyspark.ml.classification import (
     RandomForestClassifier,
 )
 from pyspark.ml.feature import StringIndexer
-from pyspark.ml.tuning import ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -132,14 +134,26 @@ def build_estimator(
     raise ValueError(f"unknown algorithm {algorithm!r}; pick from {ALGORITHMS}")
 
 
-def build_param_grid(estimator, grid_spec: dict[str, list]) -> list:
+def build_param_grid(estimator, grid_spec: dict[str, list]) -> list[dict]:
     """Cartesian param grid from config arrays
     (``ModelTrainingUtils.scala:79-174``), e.g.
-    ``{"regParam": [0.01, 0.1], "maxIter": [50, 100]}``."""
-    builder = ParamGridBuilder()
-    for name, values in grid_spec.items():
-        builder = builder.addGrid(estimator.getParam(name), values)
-    return builder.build()
+    ``{"regParam": [0.01, 0.1], "maxIter": [50, 100]}`` gives four
+    ``{name: value}`` maps, in sorted-name order; an empty spec gives
+    ``[{}]``.  The reference grids MLP hidden layers as
+    ``intermediateLayers`` (``[[4,4],[5,5]]``,
+    ``ModelTrainingUtils.scala:341-361``); the Spark param is the full
+    layer spec, so each hidden spec is wrapped with the input and output
+    sizes ``estimator`` already sniffed from the data."""
+    spec = dict(grid_spec)
+    if isinstance(estimator, MultilayerPerceptronClassifier):
+        full = estimator.getLayers()
+        for alias in ("intermediateLayers", "hiddenLayers"):
+            if alias in spec:
+                spec["layers"] = [
+                    [int(full[0]), *map(int, h), int(full[-1])] for h in spec.pop(alias)
+                ]
+    names = sorted(spec)
+    return [dict(zip(names, vals)) for vals in itertools.product(*[spec[n] for n in names])]
 
 
 def with_params(est, params: dict, max_iter: int | None = None):
@@ -156,6 +170,19 @@ def with_params(est, params: dict, max_iter: int | None = None):
     if max_iter is not None and est.hasParam("maxIter"):
         est.set(est.getParam("maxIter"), int(max_iter))
     return est
+
+
+def fit(est, df: DataFrame, params: dict | None = None, max_iter: int | None = None):
+    """Fit ``est`` on ``df`` and strip the model's training summary.  When
+    ``params`` or ``max_iter`` is given, a copy made by
+    :func:`with_params` is fitted instead, so concurrent tuner fits never
+    share an estimator.  Every classifier the package trains goes through
+    here."""
+    if params is not None or max_iter is not None:
+        est = with_params(est, params or {}, max_iter)
+    model = est.fit(df)
+    strip_training_summary(model)
+    return model
 
 
 def strip_training_summary(model) -> None:

@@ -7,15 +7,21 @@ t+ = (N+ + 1)/(N+ + 2), t- = 1/(N- + 2), which required a forked LR
 accepting double labels (``BinaryLogisticRegressionWithDoubleResponse
 .scala``).
 
-Here every class is fitted in ONE Spark query: a long frame of
-``(k, m, y)`` rows (``posexplode`` of the OVR ``class_scores`` array, or
-``k = 0`` and ``m = rawPrediction[1]`` for a binary model) is grouped by
-class, and each group minimizes the same fractional-label log-loss with
-Newton's method and a backtracking line search (Lin, Lin & Weng 2007, the
-solver LIBSVM uses for Platt scaling).  Same objective, so the same MLE
-as the reference, without one distributed LR — and its dozens of Spark
-jobs — per class.  Each group sorts its rows by ``(m, y)`` before summing,
-so A and B do not depend on row order or partitioning.
+The margins come from the model's ``rawPrediction`` vector.  A binary
+model's margin is ``rawPrediction[1]`` and gets one sigmoid.  A
+one-vs-rest model (pyspark's ``OneVsRestModel``) keeps class k's margin
+in ``rawPrediction[k]``, and each class gets its own sigmoid; the caller
+says which, from the fitted model's type, because a 2-class OVR vector
+looks like a binary one.
+
+Every class is fitted in ONE Spark query: a long frame of ``(k, m, y)``
+rows is grouped by class, and each group minimizes the fractional-label
+log-loss with Newton's method and a backtracking line search (Lin, Lin &
+Weng 2007, the solver LIBSVM uses for Platt scaling).  Same objective, so
+the same MLE as the reference, without one distributed LR — and its
+dozens of Spark jobs — per class.  Each group sorts its rows by
+``(m, y)`` before summing, so A and B do not depend on row order or
+partitioning.
 
 Scale note: one class's ``(m, y)`` margins (16 B per training row) sit in
 ONE Python worker — fine into the ~10^8 rows/class range, a cliff beyond.
@@ -92,38 +98,29 @@ def _fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 class PlattScalar:
-    """Estimator: fit per-class sigmoid calibrators on margin columns.
-
-    ``fit(scored_train)`` expects either a binary model's ``rawPrediction``
-    vector column, or an OVR ``class_scores`` array column (one margin per
-    class).  Returns a PlattScalarModel.  Every class is fitted in one
-    Spark query (a grouped Newton solve, see the module docstring).
+    """Estimator: fit sigmoid calibrators on a scored frame's
+    ``rawPrediction`` margins — one binary sigmoid, or one per class when
+    ``per_class`` (the scores of a one-vs-rest model).  Returns a
+    PlattScalarModel.  Every class is fitted in one Spark query (a grouped
+    Newton solve, see the module docstring).
     """
 
     def __init__(self, label_col: str = "label", raw_col: str = "rawPrediction",
-                 scores_col: str = "class_scores"):
+                 per_class: bool = False):
         self.label_col = label_col
         self.raw_col = raw_col
-        self.scores_col = scores_col
+        self.per_class = per_class
 
     def fit(self, scored: DataFrame) -> "PlattScalarModel":
-        label = F.col(self.label_col)
-        ovr = self.scores_col in scored.columns
-        if ovr:
-            long = scored.select(
-                F.posexplode(self.scores_col).alias("k", "m"), label.alias("__label")
-            )
+        label = F.col(self.label_col).alias("__label")
+        margins = vector_to_array(F.col(self.raw_col))
+        if self.per_class:
+            long = scored.select(F.posexplode(margins).alias("k", "m"), label)
             y = F.col("__label") == F.col("k")
         else:
-            long = scored.select(
-                F.lit(0).alias("k"),
-                vector_to_array(F.col(self.raw_col)).getItem(1).alias("m"),
-                label.alias("__label"),
-            )
+            long = scored.select(F.lit(0).alias("k"), margins.getItem(1).alias("m"), label)
             y = F.col("__label") == 1.0
-        long = long.select(
-            "k", F.col("m").cast("double"), F.when(y, 1.0).otherwise(0.0).alias("y")
-        )
+        long = long.select("k", "m", F.when(y, 1.0).otherwise(0.0).alias("y"))
         rows = sorted(
             long.groupBy("k")
             .applyInPandas(_fit_group, "k int, a double, b double")
@@ -136,16 +133,15 @@ class PlattScalar:
                if not all(v is not None and math.isfinite(v) for v in (r.a, r.b))]
         if bad:
             raise ValueError(f"PlattScalar.fit: non-finite margin for class(es) {bad}")
-        sigmoids = [(r.a, r.b) for r in rows]
-        if ovr:
-            return PlattScalarModel(sigmoids, scores_col=self.scores_col)
-        return PlattScalarModel(sigmoids, raw_col=self.raw_col)
+        return PlattScalarModel([(r.a, r.b) for r in rows], raw_col=self.raw_col)
 
 
 class PlattScalarModel(Transformer, DefaultParamsReadable, ParamsWritable):
-    """Transformer: margins → calibrated ``probability`` (array<double>),
-    argmax → ``prediction`` (SVM's own prediction kept as
-    ``svm_prediction``, ``PlattScalar.scala:363-399``).
+    """Transformer: ``rawPrediction`` margins → calibrated ``probability``
+    (array<double>), argmax → ``prediction`` (SVM's own prediction kept as
+    ``svm_prediction``, ``PlattScalar.scala:363-399``).  One sigmoid reads
+    the binary margin ``rawPrediction[1]`` and gives ``[1 - p, p]``; k
+    sigmoids read the k one-vs-rest margins ``rawPrediction[0..k-1]``.
 
     A real :class:`pyspark.ml.Transformer` with ``ParamsWritable``
     persistence (coefficients are plain params), so the calibrator
@@ -161,20 +157,16 @@ class PlattScalarModel(Transformer, DefaultParamsReadable, ParamsWritable):
         typeConverter=TypeConverters.toListFloat,
     )
     rawCol = Param(
-        Params._dummy(), "rawCol", "binary rawPrediction vector column",
-        typeConverter=TypeConverters.toString,
-    )
-    scoresCol = Param(
-        Params._dummy(), "scoresCol", "OVR per-class margin array column",
+        Params._dummy(), "rawCol", "rawPrediction margin vector column",
         typeConverter=TypeConverters.toString,
     )
 
     def __init__(self, sigmoids: list[tuple[float, float]] | None = None,
-                 raw_col: str = "rawPrediction", scores_col: str = "class_scores"):
+                 raw_col: str = "rawPrediction"):
         super().__init__()
-        self._setDefault(rawCol="rawPrediction", scoresCol="class_scores")
+        self._setDefault(rawCol="rawPrediction")
         flat = [float(v) for ab in (sigmoids or []) for v in ab]
-        self._set(coefficients=flat, rawCol=raw_col, scoresCol=scores_col)
+        self._set(coefficients=flat, rawCol=raw_col)
 
     @property
     def sigmoids(self) -> list[tuple[float, float]]:
@@ -187,26 +179,17 @@ class PlattScalarModel(Transformer, DefaultParamsReadable, ParamsWritable):
 
     def _transform(self, df: DataFrame) -> DataFrame:
         sigmoids = self.sigmoids
-        raw_col = self.getOrDefault(self.rawCol)
-        scores_col = self.getOrDefault(self.scoresCol)
+        margins = vector_to_array(F.col(self.getOrDefault(self.rawCol)))
         out = df
         if "prediction" in out.columns:
             out = out.withColumnRenamed("prediction", "svm_prediction")
         if len(sigmoids) == 1:
             a, b = sigmoids[0]
-            m = (
-                F.col(scores_col).getItem(0)
-                if scores_col in out.columns
-                else vector_to_array(F.col(raw_col)).getItem(1)
-            )
-            pos = self._sigmoid(a, b, m)
+            pos = self._sigmoid(a, b, margins.getItem(1))
             prob = F.array(1.0 - pos, pos)
         else:
             prob = F.array(
-                *[
-                    self._sigmoid(a, b, F.col(scores_col).getItem(k))
-                    for k, (a, b) in enumerate(sigmoids)
-                ]
+                *[self._sigmoid(a, b, margins.getItem(k)) for k, (a, b) in enumerate(sigmoids)]
             )
         out = out.withColumn("probability", prob)
         return out.withColumn(

@@ -19,7 +19,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 
 from flashml_spark.metrics.multiclass import multiclass_metrics
-from flashml_spark.training.estimators import strip_training_summary, with_params
+from flashml_spark.training.estimators import fit
 from pyspark.sql import functions as F
 
 # fold metric (Spark evaluator name) -> its multiclass_metrics key
@@ -66,8 +66,17 @@ class CrossValidatorWithFoldMetrics:
         tagged = df.withColumn(
             "__fold", (F.rand(self.seed) * self.num_folds).cast("int")
         ).cache()
-        tagged.count()
+        try:
+            tagged.count()
+            self._fit_folds(tagged)
+        finally:
+            tagged.unpersist()
+        # refit best on the full data (CrossValidatorCustom.scala:268-306)
+        return fit(self.estimator, df, self.best_params_)
 
+    def _fit_folds(self, tagged: DataFrame) -> None:
+        """Score every (param map, fold) pair, pick the best param map and
+        write its fold predictions when a savepoint is set."""
         tasks = [
             (p_idx, fold)
             for p_idx in range(len(self.param_maps))
@@ -80,8 +89,7 @@ class CrossValidatorWithFoldMetrics:
             p_idx, fold = task
             train = tagged.filter(F.col("__fold") != fold).drop("__fold")
             val = tagged.filter(F.col("__fold") == fold).drop("__fold")
-            model = with_params(self.estimator, self.param_maps[p_idx]).fit(train)
-            strip_training_summary(model)
+            model = fit(self.estimator, train, self.param_maps[p_idx])
             scored = model.transform(val)
             if self.predict_savepoint_path is not None:
                 # lazy plan over the fitted model — writing later re-runs only
@@ -125,9 +133,3 @@ class CrossValidatorWithFoldMetrics:
             out.write.mode("overwrite").parquet(
                 f"{self.predict_savepoint_path}/predictedData"
             )
-
-        tagged.unpersist()
-        # refit best on the full data (CrossValidatorCustom.scala:268-306)
-        best = with_params(self.estimator, self.best_params_).fit(df)
-        strip_training_summary(best)
-        return best

@@ -36,12 +36,12 @@ from __future__ import annotations
 import math
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.sql import DataFrame
 
-from flashml_spark.training.estimators import strip_training_summary, with_params
-
+from flashml_spark.metrics.multiclass import multiclass_metrics
 from flashml_spark.operators.sampling import stratified_split
+from flashml_spark.training.estimators import fit
+from flashml_spark.tuning.cv import FOLD_METRICS
 from flashml_spark.tuning.generators import ParamSpace, random_param_sets
 
 
@@ -110,11 +110,18 @@ class HyperBand:
             )
         train = train.cache()
         val = val.cache()
-        train.count(), val.count()
-        evaluator = MulticlassClassificationEvaluator(
-            labelCol=self.label_col, predictionCol="prediction", metricName=self.metric
-        )
+        try:
+            train.count(), val.count()
+            self._run_brackets(train, val)
+        finally:
+            train.unpersist()
+            val.unpersist()
+        return fit(self.estimator, df, self.best_params_, self.max_iterations_final_model)
 
+    def _run_brackets(self, train: DataFrame, val: DataFrame) -> None:
+        """Successive halving in every bracket; fills ``history_`` and
+        ``best_params_``.  Candidates are scored like CV's folds."""
+        metric_key = FOLD_METRICS[self.metric]
         s_max = int(math.floor(math.log(self.max_iter, self.eta)))
         best_score, best_params = -float("inf"), None
 
@@ -130,9 +137,9 @@ class HyperBand:
                 spark_iters = max(1, int(r_i * self.iteration_multiplier))
 
                 def evaluate(params):
-                    model = with_params(self.estimator, params, spark_iters).fit(train)
-                    strip_training_summary(model)
-                    return evaluator.evaluate(model.transform(val))
+                    model = fit(self.estimator, train, params, spark_iters)
+                    scored = model.transform(val)
+                    return multiclass_metrics(scored, self.label_col, "prediction")[metric_key]
 
                 with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
                     scores = list(pool.map(evaluate, configs))
@@ -148,11 +155,4 @@ class HyperBand:
                 ranked = sorted(zip(scores, range(len(configs))), reverse=True)
                 configs = [configs[i] for _, i in ranked[:keep]]
 
-        train.unpersist()
-        val.unpersist()
         self.best_params_ = best_params
-        model = with_params(
-            self.estimator, best_params, self.max_iterations_final_model
-        ).fit(df)
-        strip_training_summary(model)
-        return model

@@ -616,21 +616,26 @@ def test_streaming_sliding_window_matches_batch(spark, tmp_path):
     assert got == expected
 
 
+def _intent_df(spark):
+    """240 utterances, three intents, one fixed phrase each."""
+    phrases = {
+        "billing": "invoice charge payment overdue bill",
+        "support": "help broken error crash fix",
+        "sales": "buy pricing demo quote upgrade",
+    }
+    rows = []
+    for i in range(240):
+        intent = ("billing", "support", "sales")[i % 3]
+        rows.append((f"{i:06x}", phrases[intent], intent))
+    return spark.createDataFrame(rows, ["sid", "text", "intent"])
+
+
 def test_experiment_multi_intent_svm_ovr(spark):
     """Multi-intent SVM routes through OVR with per-class margins + Platt
     calibration (LinearSVC alone is binary-only)."""
     from flashml_spark.experiment import Experiment, ExperimentConfig
 
-    rows = []
-    for i in range(240):
-        intent = ("billing", "support", "sales")[i % 3]
-        text = {
-            "billing": "invoice charge payment overdue bill",
-            "support": "help broken error crash fix",
-            "sales": "buy pricing demo quote upgrade",
-        }[intent]
-        rows.append((f"{i:06x}", text, intent))
-    df = spark.createDataFrame(rows, ["sid", "text", "intent"])
+    df = _intent_df(spark)
 
     cfg = ExperimentConfig(
         primary_keys=["sid"], response="intent", text_cols=["text"],
@@ -666,7 +671,7 @@ def test_experiment_hyperband_tuning(spark):
 
 
 def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
-    """The multi-intent SVM tail (OneVsRestScoresModel + PlattScalarModel)
+    """The multi-intent SVM tail (OneVsRestModel + PlattScalarModel)
     is MLWritable: the per-page pipeline saves, reloads — including in a
     FRESH interpreter/JVM — and reproduces predictions exactly (reference
     ``systemTests/MultiIntentSVMTest.scala:24-107``,
@@ -675,21 +680,12 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
     import sys
 
     from pyspark.ml import PipelineModel
+    from pyspark.ml.classification import OneVsRestModel
 
     from flashml_spark.experiment import Experiment, ExperimentConfig
-    from flashml_spark.training.ovr import OneVsRestScoresModel
     from flashml_spark.training.platt import PlattScalarModel
 
-    rows = []
-    for i in range(240):
-        intent = ("billing", "support", "sales")[i % 3]
-        text = {
-            "billing": "invoice charge payment overdue bill",
-            "support": "help broken error crash fix",
-            "sales": "buy pricing demo quote upgrade",
-        }[intent]
-        rows.append((f"{i:06x}", text, intent))
-    df = spark.createDataFrame(rows, ["sid", "text", "intent"])
+    df = _intent_df(spark)
 
     root = str(tmp_path / "sp")
     cfg = ExperimentConfig(
@@ -703,7 +699,7 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
 
     # the saved pipeline tail must be the OVR composite + Platt calibrator
     loaded = PipelineModel.load(f"{root}/pipeline/page0/model_pipeline")
-    assert isinstance(loaded.stages[-2], OneVsRestScoresModel)
+    assert isinstance(loaded.stages[-2], OneVsRestModel)
     assert isinstance(loaded.stages[-1], PlattScalarModel)
 
     def rowmap(scored):
@@ -748,6 +744,53 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
         for r in spark.read.parquet(out_path).collect()
     }
     assert fresh_rows == in_mem
+
+
+def test_multi_intent_svm_saves_spark_one_vs_rest(spark, tmp_path):
+    """The saved multi-intent SVM page pipeline's OVR stage is Spark's own
+    ``OneVsRestModel``: Scala's ``OneVsRestModel.load`` reads it, and its
+    ``rawPrediction[k]`` is the ``rawPrediction[1]`` of a LinearSVC fitted
+    directly on ``label == k`` over the same training frame."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.classification import LinearSVC, OneVsRestModel
+    from pyspark.ml.functions import vector_to_array
+
+    from flashml_spark.sources.savepoint import SavepointManager
+
+    root = str(tmp_path / "sp")
+    cfg = ExperimentConfig(
+        primary_keys=["sid"], response="intent", text_cols=["text"],
+        text_method="hashingtf", slots=64, algorithm="svm",
+        algo_params={"maxIter": 10}, multi_intent=True, savepoint_root=root,
+    )
+    Experiment(cfg).run(spark, _intent_df(spark))
+
+    path = f"{root}/pipeline/page0/model_pipeline"
+    loaded = PipelineModel.load(path)
+    i = len(loaded.stages) - 2
+    ovr = loaded.stages[i]
+    assert isinstance(ovr, OneVsRestModel)
+    jvm_ovr = spark._jvm.org.apache.spark.ml.classification.OneVsRestModel.load(
+        f"{path}/stages/{i}_{ovr.uid}"
+    )
+    assert len(jvm_ovr.models()) == 3
+
+    sp = SavepointManager(spark, root)
+    train = sp.load("vectorization", "train")
+    test = sp.load("vectorization", "test").select("sid", "features")
+    margins = {
+        r["sid"]: r["m"]
+        for r in ovr.transform(test)
+        .select("sid", vector_to_array("rawPrediction").alias("m"))
+        .collect()
+    }
+    for k in range(3):
+        binary = train.withColumn("y", (F.col("intent_indexed") == float(k)).cast("double"))
+        svm = LinearSVC(maxIter=10, labelCol="y").fit(binary)
+        for r in svm.transform(test).select(
+            "sid", vector_to_array("rawPrediction").getItem(1).alias("m")
+        ).collect():
+            assert margins[r["sid"]][k] == pytest.approx(r["m"], rel=1e-9, abs=1e-12)
 
 
 def test_experiment_step_level_resume(spark, tmp_path):

@@ -140,15 +140,15 @@ def test_ovr_with_scores_and_platt(spark):
     df = Tokenizer(inputCol="text", outputCol="toks").transform(df)
     df = HashingTF(inputCol="toks", outputCol="features", numFeatures=64).transform(df)
 
-    ovr = OneVsRestWithScores(lambda: LinearSVC(maxIter=20), label_col="label")
+    ovr = OneVsRestWithScores(classifier=LinearSVC(maxIter=20), labelCol="label")
     model = ovr.fit(df)
+    assert all(not m._java_obj.hasSummary() for m in model.models)
     scored = model.transform(df)
-    assert "class_scores" in scored.columns
-    assert len(scored.first()["class_scores"]) == 3
+    assert len(scored.first()["rawPrediction"]) == 3
     acc = scored.filter(F.col("prediction") == F.col("label")).count() / df.count()
     assert acc > 0.95
 
-    platt = PlattScalar(label_col="label").fit(scored)
+    platt = PlattScalar(label_col="label", per_class=True).fit(scored)
     calibrated = platt.transform(scored)
     row = calibrated.first()
     assert "svm_prediction" in calibrated.columns
@@ -605,8 +605,9 @@ def test_multiclass_metrics_empty_frame(spark):
 
 
 def _margin_rows(n_classes: int, n: int = 400, seed: int = 5, labels=None):
-    """Deterministic noisy margins: ``(label, class_scores)`` rows whose
-    own-class margin sits higher; ``labels`` overrides the i % k labels."""
+    """Deterministic noisy margins: ``(label, per-class margins)`` rows
+    whose own-class margin sits higher; ``labels`` overrides the i % k
+    labels."""
     rnd = random.Random(seed)
     rows = []
     for i in range(n):
@@ -617,7 +618,13 @@ def _margin_rows(n_classes: int, n: int = 400, seed: int = 5, labels=None):
 
 
 def _ovr_scored(spark, rows):
-    return spark.createDataFrame(rows, "label double, class_scores array<double>")
+    """A one-vs-rest model's scored frame: class k's margin in
+    ``rawPrediction[k]``."""
+    from pyspark.ml.linalg import Vectors
+
+    return spark.createDataFrame(
+        [(label, Vectors.dense(s)) for label, s in rows], ["label", "rawPrediction"]
+    )
 
 
 def _binary_scored(spark, rows):
@@ -673,7 +680,7 @@ def test_platt_newton_matches_weighted_lr_and_zeroes_the_gradient(spark, binary)
     Platt's gradient at its (A, B) is zero to 1e-8 per row."""
     rows = _margin_rows(2 if binary else 4)
     scored = _binary_scored(spark, rows) if binary else _ovr_scored(spark, rows)
-    sigmoids = PlattScalar(label_col="label").fit(scored).sigmoids
+    sigmoids = PlattScalar(label_col="label", per_class=not binary).fit(scored).sigmoids
     assert len(sigmoids) == (1 if binary else 4)
     for k, (a, b) in enumerate(sigmoids):
         m, y = _class_margins(rows, k, binary)
@@ -688,15 +695,13 @@ def test_platt_fit_is_partition_invariant_and_one_query(spark):
     coefficients, and a 4-class fit starts at most 2 Spark jobs (the
     per-class LogisticRegression fits it replaces started dozens)."""
     scored = _ovr_scored(spark, _margin_rows(4, n=600, seed=9))
-    fits = {
-        n: PlattScalar(label_col="label").fit(scored.repartition(n)).sigmoids
-        for n in (1, 3, 8)
-    }
+    platt = PlattScalar(label_col="label", per_class=True)
+    fits = {n: platt.fit(scored.repartition(n)).sigmoids for n in (1, 3, 8)}
     assert fits[1] == fits[3] == fits[8]
     cached = scored.repartition(3).cache()
     cached.count()
     try:
-        assert jobs_started(spark, lambda: PlattScalar(label_col="label").fit(cached)) <= 2
+        assert jobs_started(spark, lambda: platt.fit(cached)) <= 2
     finally:
         cached.unpersist()
 
@@ -705,13 +710,14 @@ def test_platt_fit_is_partition_invariant_and_one_query(spark):
 def test_platt_fit_rejects_empty_and_non_finite_margins(spark, binary):
     rows = _margin_rows(2, n=40)
     make = _binary_scored if binary else _ovr_scored
+    platt = PlattScalar(label_col="label", per_class=not binary)
     empty = make(spark, rows).limit(0)
     with pytest.raises(ValueError, match="at least one scored row"):
-        PlattScalar(label_col="label").fit(empty)
+        platt.fit(empty)
     for bad in (math.nan, math.inf):
         broken = [(label, [s[0], bad if i == 7 else s[1]]) for i, (label, s) in enumerate(rows)]
         with pytest.raises(ValueError, match="non-finite margin"):
-            PlattScalar(label_col="label").fit(make(spark, broken))
+            platt.fit(make(spark, broken))
 
 
 @pytest.mark.parametrize("binary", [True, False], ids=["binary", "ovr"])
@@ -720,9 +726,10 @@ def test_platt_fit_one_sided_classes_get_finite_coefficients(spark, binary):
     still get finite A and B: Platt's smoothed targets keep the optimum
     finite (all-equal targets t give A = 0, B = logit(t))."""
     make = _binary_scored if binary else _ovr_scored
+    platt = PlattScalar(label_col="label", per_class=not binary)
     for label in (0, 1):
         rows = _margin_rows(2, n=50, labels=[label] * 50)
-        sigmoids = PlattScalar(label_col="label").fit(make(spark, rows)).sigmoids
+        sigmoids = platt.fit(make(spark, rows)).sigmoids
         for k, (a, b) in enumerate(sigmoids):
             assert math.isfinite(a) and math.isfinite(b)
             m, y = _class_margins(rows, k, binary)

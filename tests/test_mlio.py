@@ -111,19 +111,22 @@ def test_ovr_and_platt_roundtrip_through_pipeline_load(spark, tmp_path):
         for i in range(4) for c in range(3)
     ]
     df = spark.createDataFrame(rows, ["features", "label"])
-    ovr = OneVsRestWithScores(lambda: LinearSVC(maxIter=5), parallelism=3).fit(df)
+    ovr = OneVsRestWithScores(classifier=LinearSVC(maxIter=5), parallelism=3).fit(df)
     platt = PlattScalarModel([(1.5, -0.5), (2.0, 0.1), (0.7, 0.0)])
     model = PipelineModel([ovr, platt])
     path = str(tmp_path / "ovr_pipeline")
     save_pipeline(model, path)
     meta = _metadata(f"{path}/stages/0_{ovr.uid}")
-    assert meta["numModels"] == 3
-    assert meta["modelClasses"] == ["pyspark.ml.classification.LinearSVCModel"] * 3
+    assert meta["class"] == "org.apache.spark.ml.classification.OneVsRestModel"
+    assert meta["numClasses"] == 3
+    assert _metadata(f"{path}/stages/0_{ovr.uid}/model_0")["class"] == (
+        "org.apache.spark.ml.classification.LinearSVCModel"
+    )
 
     loaded = PipelineModel.load(path)
-    cols = ["label", "class_scores", "probability", "prediction", "svm_prediction"]
-    want = model.transform(df).select(cols).orderBy("label", "class_scores").collect()
-    got = loaded.transform(df).select(cols).orderBy("label", "class_scores").collect()
+    cols = ["label", "rawPrediction", "probability", "prediction", "svm_prediction"]
+    want = model.transform(df).select(cols).orderBy("label", "probability").collect()
+    got = loaded.transform(df).select(cols).orderBy("label", "probability").collect()
     assert got == want
 
 

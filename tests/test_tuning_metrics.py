@@ -230,8 +230,8 @@ def test_hyperband_fit_executes_schedule(spark):
 
 def test_with_params_sets_a_copy(spark):
     """The one param setter the tuners share: a param map plus maxIter on
-    a copy; estimators without maxIter ignore it; OVR passes both to every
-    binary estimator its factory builds."""
+    a copy; estimators without maxIter ignore it; OVR passes both to its
+    classifier, so every per-class fit gets them."""
     from pyspark.ml.classification import NaiveBayes
 
     from flashml_spark.training.estimators import with_params
@@ -247,12 +247,32 @@ def test_with_params_sets_a_copy(spark):
     nb = with_params(NaiveBayes(), {"smoothing": 2.0}, max_iter=7)
     assert nb.getSmoothing() == 2.0 and not nb.hasParam("maxIter")
 
-    ovr = OneVsRestWithScores(lambda: LogisticRegression(maxIter=100))
-    factory = with_params(ovr, {"regParam": 0.3}, max_iter=7).base_estimator_factory
-    built = [factory() for _ in range(3)]
-    assert len({id(e) for e in built}) == 3
-    assert all((e.getRegParam(), e.getMaxIter()) == (0.3, 7) for e in built)
-    assert ovr.base_estimator_factory().getMaxIter() == 100
+    ovr = OneVsRestWithScores(classifier=LogisticRegression(maxIter=100))
+    tuned = with_params(ovr, {"regParam": 0.3}, max_iter=7)
+    assert isinstance(tuned, OneVsRestWithScores) and tuned is not ovr
+    assert ovr.getClassifier().getMaxIter() == 100
+    rows = [(Vectors.dense([float(i % 3 == c) for c in range(3)]), float(i % 3))
+            for i in range(30)]
+    model = tuned.fit(spark.createDataFrame(rows, ["features", "label"]))
+    assert len(model.models) == 3
+    assert all((m.getRegParam(), m.getMaxIter()) == (0.3, 7) for m in model.models)
+
+
+@pytest.mark.parametrize("tuner", ["cv", "hyperband"])
+def test_tuner_frees_its_cache_when_a_fit_raises(spark, tuner):
+    """A param the estimator lacks makes ``with_params`` raise inside the
+    tuner's pool; the frames the tuner cached are freed all the same."""
+    df = _lr_data(spark)
+    est = LogisticRegression(maxIter=5)
+    if tuner == "cv":
+        t = CrossValidatorWithFoldMetrics(est, [{"noSuchParam": 1.0}], parallelism=2)
+    else:
+        t = HyperBand(est, ParamSpace().add_choices("noSuchParam", [1.0]),
+                      max_hyperband_iter=3, parallelism=2)
+    pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="noSuchParam"):
+        t.fit(df)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pinned
 
 
 def test_hyperband_schedule_parity_reference_defaults():
