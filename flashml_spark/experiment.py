@@ -3,7 +3,9 @@ reference's 11-step pipeline (``core/PipelineSteps.scala:35-296``):
 
     dataReader → sampling → preprocessing → featureGeneration →
     vectorization → modelling → scoring → standardmetrics → custommetrics
-    (→ publish handled by PipelineModel.save)
+    (→ publish: each page saves one PipelineModel per step, its feature
+    stages in ``prep_pipeline`` and its model (plus Platt) in
+    ``model_pipeline``; ``load_models`` composes the two)
 
 Programmatic API first (SURVEY §7): ``Experiment(config).run(spark)``; a
 JSON config is just a serialization of ``ExperimentConfig``.
@@ -353,9 +355,9 @@ class Experiment:
 
     @staticmethod
     def _indexer_labels(pipeline: PipelineModel) -> list[str] | None:
-        """Response labels from the fitted StringIndexer stage — scanned in
-        reverse so it works on the prep pipeline (indexer last) AND on a
-        loaded full pipeline (indexer followed by the model tail)."""
+        """Response labels from the fitted StringIndexer stage of a page
+        pipeline — the last prep stage, so the scan runs in reverse, past
+        the model tail."""
         for stage in reversed(pipeline.stages):
             if hasattr(stage, "labelsArray"):
                 return list(stage.labelsArray[0])
@@ -460,14 +462,10 @@ class Experiment:
         if resume_from is None:
             data = self.read(df)
             if sp:
-                # Every savepoint is written AND immediately re-read
-                # (materialization barrier): downstream steps in this run
-                # consume the exact parquet frame a resumed run will load —
-                # same partition layout, same row order — so randomSplit
-                # and float aggregation replay identically and the resumed
-                # run's output is byte-identical to this one's.
-                sp.save(data, "dataReader", "full")
-                data = sp.load("dataReader", "full")
+                # every savepoint is a materialization barrier
+                # (SavepointManager.barrier), so a resumed run replays this
+                # run's frames byte for byte
+                data = sp.barrier(data, "dataReader", "full")
             data = data.persist()
         elif resume_from == "sampling":
             data = sp.load("dataReader", "full").persist()
@@ -475,10 +473,8 @@ class Experiment:
         if resume_from in (None, "sampling"):
             train, test = self.split(data)
             if sp:
-                sp.save(train, "sampling", "train")
-                sp.save(test, "sampling", "test")
-                train = sp.load("sampling", "train")
-                test = sp.load("sampling", "test")
+                train = sp.barrier(train, "sampling", "train")
+                test = sp.barrier(test, "sampling", "test")
         elif resume_from == "vectorization":
             train, test = sp.load("sampling", "train"), sp.load("sampling", "test")
 
@@ -495,10 +491,9 @@ class Experiment:
         self.tuning_ = []
 
         def _run_page(k, tr, te):
+            pipeline_dir = f"{c.savepoint_root}/pipeline/page{k}"
             if resume_from == "modelling":
-                prep = PipelineModel.load(
-                    f"{c.savepoint_root}/pipeline/page{k}/prep_pipeline"
-                )
+                prep = PipelineModel.load(f"{pipeline_dir}/prep_pipeline")
                 tr_v = sp.load("vectorization", "train", page=k).persist()
                 te = sp.load("vectorization", "test", page=k)
             else:
@@ -508,22 +503,15 @@ class Experiment:
                 if sp:
                     # vector columns (VectorUDT) persist fine in parquet —
                     # these savepoints are exactly what resume_from=
-                    # "modelling" reloads.  Fit from the RELOADED savepoint
-                    # (materialization barrier): the resumed run then sees
-                    # the identical frame — same partition layout, same
-                    # float aggregation order — so its refit model and
-                    # scored output are byte-identical to this run's.
-                    sp.save(tr_v, "vectorization", "train", page=k)
-                    sp.save(te, "vectorization", "test", page=k)
-                    save_pipeline(
-                        prep, f"{c.savepoint_root}/pipeline/page{k}/prep_pipeline"
-                    )
-                    tr_v = sp.load("vectorization", "train", page=k)
-                    te = sp.load("vectorization", "test", page=k)
+                    # "modelling" reloads, and the model fits from the
+                    # reloaded frame, as a resumed run's refit does
+                    tr_v = sp.barrier(tr_v, "vectorization", "train", page=k)
+                    te = sp.barrier(te, "vectorization", "test", page=k)
+                    save_pipeline(prep, f"{pipeline_dir}/prep_pipeline")
                 tr_v = tr_v.persist()
             model, tuning_info = self._fit_model(tr_v, label_col, page=k)
             scored = model.transform(te)  # te: already vectorized
-            tail = [model]
+            tail_stages = [model]
             if use_platt:
                 # an OVR model's rawPrediction holds one margin per class
                 calibrator = PlattScalar(
@@ -535,18 +523,19 @@ class Experiment:
                 # (reference: OneVsRestCustomModel + PlattScalar are both
                 # MLWritable pipeline stages, loaded by
                 # ModelTrainingEngine.loadPipelineArray:109-118)
-                tail.append(calibrator)
+                tail_stages.append(calibrator)
             tr_v.unpersist()
-            full_model = PipelineModel(prep.stages + tail)
+            tail = PipelineModel(tail_stages)
+            full_model = PipelineModel(prep.stages + tail.stages)
             scored = self._finish_page(scored, full_model, k)
             if sp:
                 sp.save(
                     scored.drop(*[col for col, t in scored.dtypes if t == "vector"]),
                     "scoring", "test", page=k,
                 )
-                save_pipeline(
-                    full_model, f"{c.savepoint_root}/pipeline/page{k}/model_pipeline"
-                )
+                # one PipelineModel per step (DirectoryCreator.scala:39-149):
+                # the prep stages are saved once, in prep_pipeline
+                save_pipeline(tail, f"{pipeline_dir}/model_pipeline")
             return scored, full_model, tuning_info
 
         # independent page models fit concurrently; page order is kept
@@ -689,18 +678,22 @@ class Experiment:
 
     # ---- predict-only resume (SURVEY §3.2) -------------------------------
     def load_models(self, root: str | None = None) -> list[PipelineModel]:
-        """Load the per-page fitted pipelines saved by ``run`` — the
-        savepoint contract that makes ``experiment.type=predict`` runs
-        possible without refitting (``PipelineSteps.scala:73-78``;
+        """Load the per-page fitted pipelines saved by ``run``, each composed
+        from its ``prep_pipeline`` and ``model_pipeline`` — the savepoint
+        contract that makes ``experiment.type=predict`` runs possible
+        without refitting (``PipelineSteps.scala:73-78``;
         ``DirectoryCreator.scala:102-109``)."""
         c = self.config
         root = root or c.savepoint_root
         if root is None:
             raise ValueError("predict-only runs need savepoint_root")
-        self.models_ = [
-            PipelineModel.load(f"{root}/pipeline/page{k}/model_pipeline")
-            for k in range(self._n_pages)
-        ]
+        self.models_ = []
+        for k in range(self._n_pages):
+            prep, tail = (
+                PipelineModel.load(f"{root}/pipeline/page{k}/{step}")
+                for step in ("prep_pipeline", "model_pipeline")
+            )
+            self.models_.append(PipelineModel(prep.stages + tail.stages))
         return self.models_
 
     def predict(self, spark: SparkSession, df: DataFrame) -> DataFrame:

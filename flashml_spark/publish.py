@@ -2,8 +2,9 @@
 
 Reference behaviors re-expressed Spark-native:
   * Spark-native publish (``publish/Publish.scala:60-164,170-203``):
-    combine the per-step fitted PipelineModels into ONE PipelineModel and
-    save it — a user loads a single artifact for scoring.
+    ``Experiment.run`` saves each page's fitted steps as native
+    PipelineModels (``prep_pipeline`` and ``model_pipeline``) and
+    ``Experiment.load_models`` composes them into one for scoring.
   * QA data generation (``publish/Publish.scala:261-474``): join scored
     rows back to the input on the concatenated primary key, sample N rows,
     write csv/json.  The join is keyed on the composite key; the sampled
@@ -16,27 +17,9 @@ The JS-coefficient and MLeap publishers are intentionally out of scope
 
 from __future__ import annotations
 
-from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from flashml_spark.mlio import save_pipeline
 from flashml_spark.operators.relational import concat_key
-
-
-def combine_pipeline_models(models: list[PipelineModel]) -> PipelineModel:
-    """Flatten per-step PipelineModels into one (stage order preserved) —
-    the reference's spark-native publish assembles exactly this."""
-    stages = []
-    for m in models:
-        stages.extend(m.stages)
-    return PipelineModel(stages)
-
-
-def save_full_pipeline(models: list[PipelineModel], path: str) -> PipelineModel:
-    combined = combine_pipeline_models(models)
-    save_pipeline(combined, path)
-    return combined
 
 
 def qa_data(

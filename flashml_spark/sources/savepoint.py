@@ -45,6 +45,17 @@ class SavepointManager:
     def load(self, step: str, dataset: str = "train", page: int = 0) -> DataFrame:
         return self.spark.read.parquet(self.path(step, dataset, page))
 
+    def barrier(self, df: DataFrame, step: str, dataset: str = "train",
+                page: int = 0) -> DataFrame:
+        """Save ``df`` and return the frame re-read from the savepoint.
+
+        Downstream steps then consume the exact parquet frame a resumed run
+        will load — same partition layout, same row order — so randomSplit
+        and float aggregation replay identically and a resumed run's output
+        is byte-identical to the original's."""
+        self.save(df, step, dataset, page)
+        return self.load(step, dataset, page)
+
 
 def write_bucketed(
     df: DataFrame,

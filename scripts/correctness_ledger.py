@@ -33,10 +33,10 @@ import json
 import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 
 def collect(upto: int | None = None) -> tuple[dict[str, tuple[int, str]], int]:

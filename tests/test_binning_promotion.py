@@ -159,22 +159,21 @@ def test_load_config_binning_validation():
         load_config(bad2)
 
 
-def test_exact_quantile_splits_matches_percentile_agg(spark):
+def test_exact_quantile_splits_matches_percentile_agg(spark, monkeypatch):
     # r12: the distributed sort+interpolate path must be BIT-identical
     # to the percentile aggregate it replaced (formula
     # (hi-pos)*v[lo] + (pos-lo)*v[hi], floor/ceil positions).
     import random
     import struct
+    from decimal import Decimal
 
     from pyspark.sql import functions as F
 
+    from flashml_spark.functions import windows
     from flashml_spark.operators.binning import exact_quantile_splits
 
-    rng = random.Random(13)
-    for n_rows, n_bins in ((7, 4), (96, 4), (313, 10), (1000, 3)):
-        vals = [rng.uniform(-1e4, 1e6) for _ in range(n_rows)]
-        vals += [vals[0]] * 3  # ties
-        df = spark.createDataFrame([(v,) for v in vals], "x double")
+    def check(vals, dtype, n_bins):
+        df = spark.createDataFrame([(v,) for v in vals], f"x {dtype}")
         got = exact_quantile_splits(df, "x", n_bins)
         qs = ", ".join(str(i / n_bins) for i in range(1, n_bins))
         want_raw = df.agg(
@@ -184,6 +183,31 @@ def test_exact_quantile_splits_matches_percentile_agg(spark):
         for s in want_raw:
             if not want or s > want[-1]:
                 want.append(float(s))
-        assert len(got) == len(want)
+        assert len(got) == len(want), (vals, got, want)
         for g, w in zip(got, want):
-            assert struct.pack("<d", g) == struct.pack("<d", w), (g, w)
+            assert struct.pack("<d", g) == struct.pack("<d", w), (vals, g, w)
+
+    rng = random.Random(13)
+    for n_rows, n_bins in ((7, 4), (96, 4), (313, 10), (1000, 3)):
+        vals = [rng.uniform(-1e4, 1e6) for _ in range(n_rows)]
+        vals += [vals[0]] * 3  # ties
+        check(vals, "double", n_bins)
+    nan = float("nan")
+    edges = (
+        [1.0, 2.0, nan, 3.0, -0.0, 0.0, 0.0, 5.0],  # NaN sorts last
+        [0.0, -0.0, -0.0, 0.0, 1.0, 2.0],  # signed zeros
+        [nan, nan, nan, 1.0, 2.0],  # all NaN but two
+    )
+    for vals in edges:
+        for n_bins in (3, 4):
+            check(vals, "double", n_bins)
+
+    # non-float columns never reach the distributed sort: they keep the
+    # percentile aggregate
+    def no_sort(*args, **kwargs):
+        raise AssertionError("global_row_number on a non-float column")
+
+    monkeypatch.setattr(windows, "global_row_number", no_sort)
+    ints = [rng.randrange(-50, 50) for _ in range(40)]
+    check(ints, "int", 4)
+    check([Decimal(v) / 4 for v in ints], "decimal(10,2)", 4)

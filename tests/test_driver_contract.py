@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import importlib.util
 import json
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _entry():
-    spec = importlib.util.spec_from_file_location("entry", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry", str(REPO / "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -47,10 +50,10 @@ def test_priority_window_follows_ledger_policy():
     # CORRECTNESS_r*.json history — i.e. the 50 max-age keys.
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import correctness_ledger as cl
 
-    with open("/root/repo/PRIORITY_WINDOW.json") as f:
+    with open(REPO / "PRIORITY_WINDOW.json") as f:
         pw = json.load(f)
     committed = pw["window"]
     # Recompute the window AS OF the committed generated_after_round so a
@@ -63,7 +66,7 @@ def test_priority_window_follows_ledger_policy():
     names = cl.registry_names()
     # r11: oracle-upgraded-pending rows rotate with the never-checked
     # tier; the committed state file carries the upgrade stamps
-    with open("/root/repo/ORACLE_HASHES.json") as f:
+    with open(REPO / "ORACLE_HASHES.json") as f:
         state = json.load(f)
     pending = cl.pending_upgrades(last, state)
     assert pending == set(pw["pending_oracle_upgrade"])
@@ -116,7 +119,7 @@ def test_next_window_front_loads_failures():
     # ahead of every green row regardless of age.
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import correctness_ledger as cl
 
     names = ["q_new", "q_red", "q_err", "q_stale", "q_fresh"]
@@ -141,7 +144,7 @@ def test_ledger_collect_upto_ignores_later_driver_drops(tmp_path, monkeypatch):
     # LATER round than ``upto`` must not change the computed staleness.
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import correctness_ledger as cl
 
     row = {"qa": {"hash_match": True, "spark_rows": 1}}
@@ -170,7 +173,7 @@ def test_correctness_ledger_covers_every_registered_query():
     # so per-query driver-row staleness is machine-checked, not
     # comment-tracked; every registered query must have a row.
     e = _entry()
-    with open("/root/repo/CORRECTNESS_LEDGER.md") as f:
+    with open(REPO / "CORRECTNESS_LEDGER.md") as f:
         ledger = f.read()
     missing = [n for n in e.queries() if f"| {n} |" not in ledger]
     assert not missing, f"queries absent from CORRECTNESS_LEDGER.md: {missing}"
@@ -265,8 +268,8 @@ def test_bench_tables_are_append_only(tmp_path, monkeypatch):
     assert not _os.path.exists(bench.local_table_path(repo))
 
     # and the historical driver tables exist as real files at HEAD
-    assert _os.path.exists("/root/repo/BENCH_DRIVER_r08.json")
-    assert _os.path.exists("/root/repo/BENCH_DRIVER_r09.json")
+    assert _os.path.exists(REPO / "BENCH_DRIVER_r08.json")
+    assert _os.path.exists(REPO / "BENCH_DRIVER_r09.json")
 
 
 def test_bench_headline30_pinned():
@@ -374,7 +377,7 @@ def test_oracle_upgrade_pending_tier(tmp_path):
     # the never-checked tier, (c) clear once a fresh driver row lands.
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     import correctness_ledger as cl
 
     names = ["q_a", "q_b", "q_c", "q_new"]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,8 +75,6 @@ def test_experiment_page_level(spark):
 
 
 def test_experiment_savepoints_roundtrip(spark, tmp_path):
-    from pyspark.ml import PipelineModel
-
     df = _journey_df(spark, 120)
     root = str(tmp_path / "sp")
     cfg = ExperimentConfig(
@@ -91,7 +91,7 @@ def test_experiment_savepoints_roundtrip(spark, tmp_path):
         m = _json.load(f)
     assert "test.accuracy" in m and "test.auroc" in m
 
-    reloaded = PipelineModel.load(f"{root}/pipeline/page0/model_pipeline")
+    (reloaded,) = Experiment(cfg).load_models()
     out = reloaded.transform(df)
     assert "prediction" in out.columns
     scored = spark.read.parquet(f"{root}/default/model/page0/noSegment/data/scoringTest")
@@ -319,33 +319,21 @@ def test_read_source_dispatch(spark, tmp_path):
 
 
 def test_publish_and_qa_data(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    """Spark-native publish: per-step PipelineModels combine into one; QA
-    data joins scored rows back to the input and samples."""
-    from pyspark.ml import Pipeline, PipelineModel
+    """QA data joins scored rows back to the input and samples."""
+    from pyspark.ml import Pipeline
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import HashingTF, RegexTokenizer
 
-    from flashml_spark.publish import qa_data, save_full_pipeline, write_qa_data
+    from flashml_spark.publish import qa_data, write_qa_data
 
     df = _journey_df(spark, 200).withColumn(
         "resp_d", F.col("response").cast("double")
     )
-    pre = Pipeline(stages=[
+    scored = Pipeline(stages=[
         RegexTokenizer(inputCol="text", outputCol="toks", pattern=r"\s+"),
         HashingTF(inputCol="toks", outputCol="features", numFeatures=64),
-    ]).fit(df)
-    model = Pipeline(stages=[
-        LogisticRegression(labelCol="resp_d", featuresCol="features", maxIter=5)
-    ]).fit(pre.transform(df))
-
-    path = str(tmp_path / "full_pipeline")
-    combined = save_full_pipeline([pre, model], path)
-    assert len(combined.stages) == 3
-    reloaded = PipelineModel.load(path)
-    scored = reloaded.transform(df)
-    assert "prediction" in scored.columns
+        LogisticRegression(labelCol="resp_d", featuresCol="features", maxIter=5),
+    ]).fit(df).transform(df)
 
     qa = qa_data(scored, df, ["session_id", "page"], n_rows=20)
     assert 0 < qa.count() <= 20
@@ -679,7 +667,6 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
     import subprocess
     import sys
 
-    from pyspark.ml import PipelineModel
     from pyspark.ml.classification import OneVsRestModel
 
     from flashml_spark.experiment import Experiment, ExperimentConfig
@@ -698,7 +685,7 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
     exp.run(spark, df)
 
     # the saved pipeline tail must be the OVR composite + Platt calibrator
-    loaded = PipelineModel.load(f"{root}/pipeline/page0/model_pipeline")
+    (loaded,) = Experiment(cfg).load_models()
     assert isinstance(loaded.stages[-2], OneVsRestModel)
     assert isinstance(loaded.stages[-1], PlattScalarModel)
 
@@ -725,18 +712,19 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
     df.write.parquet(data_path)
     script = tmp_path / "reload_score.py"
     script.write_text(
+        "from flashml_spark.experiment import Experiment, ExperimentConfig\n"
         "from flashml_spark.session import get_spark\n"
-        "from pyspark.ml import PipelineModel\n"
         "spark = get_spark('fresh-reload', cpus=4, shuffle_partitions=4)\n"
-        f"m = PipelineModel.load({f'{root}/pipeline/page0/model_pipeline'!r})\n"
+        f"(m,) = Experiment(ExperimentConfig(savepoint_root={root!r})).load_models()\n"
         f"scored = m.transform(spark.read.parquet({data_path!r}))\n"
         f"scored.select('sid', 'prediction', 'probability').write.parquet({out_path!r})\n"
     )
     import os
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    repo = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, PYTHONPATH=repo)
     subprocess.run(
-        [sys.executable, str(script)], check=True, cwd="/root/repo",
+        [sys.executable, str(script)], check=True, cwd=repo,
         capture_output=True, timeout=300, env=env,
     )
     fresh_rows = {
@@ -751,7 +739,6 @@ def test_multi_intent_svm_saves_spark_one_vs_rest(spark, tmp_path):
     ``OneVsRestModel``: Scala's ``OneVsRestModel.load`` reads it, and its
     ``rawPrediction[k]`` is the ``rawPrediction[1]`` of a LinearSVC fitted
     directly on ``label == k`` over the same training frame."""
-    from pyspark.ml import PipelineModel
     from pyspark.ml.classification import LinearSVC, OneVsRestModel
     from pyspark.ml.functions import vector_to_array
 
@@ -765,13 +752,12 @@ def test_multi_intent_svm_saves_spark_one_vs_rest(spark, tmp_path):
     )
     Experiment(cfg).run(spark, _intent_df(spark))
 
-    path = f"{root}/pipeline/page0/model_pipeline"
-    loaded = PipelineModel.load(path)
-    i = len(loaded.stages) - 2
-    ovr = loaded.stages[i]
+    (loaded,) = Experiment(cfg).load_models()
+    ovr = loaded.stages[-2]
     assert isinstance(ovr, OneVsRestModel)
+    # the saved model pipeline holds the tail only, so OVR is its stage 0
     jvm_ovr = spark._jvm.org.apache.spark.ml.classification.OneVsRestModel.load(
-        f"{path}/stages/{i}_{ovr.uid}"
+        f"{root}/pipeline/page0/model_pipeline/stages/0_{ovr.uid}"
     )
     assert len(jvm_ovr.models()) == 3
 

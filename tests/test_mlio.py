@@ -10,7 +10,7 @@ from pathlib import Path
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.ml import PipelineModel
-from pyspark.ml.classification import LinearSVC
+from pyspark.ml.classification import LinearSVC, LogisticRegressionModel
 from pyspark.ml.feature import HashingTF, Tokenizer
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.linalg import Vectors
@@ -190,8 +190,9 @@ def test_paged_binned_run_saves_without_stock_metadata_writes(
     spark, tmp_path, monkeypatch
 ):
     """A hotlead-shaped run (3 pages, binning, categoricals, savepoints)
-    writes no metadata through pyspark's Python-RDD writer, and every
-    pipeline it saves scores as the in-memory one does."""
+    writes no metadata through pyspark's Python-RDD writer, saves each
+    fitted stage once, and every page pipeline ``load_models`` composes
+    from the saved steps scores as the in-memory one does."""
     calls = []
     stock = DefaultParamsWriter.saveMetadata
 
@@ -221,12 +222,20 @@ def test_paged_binned_run_saves_without_stock_metadata_writes(
     exp.run(spark, df)
     assert calls == []
 
+    def uids(m):
+        return [s.uid for s in m.stages]
+
+    loaded = Experiment(cfg).load_models()
     for k, model in enumerate(exp.models_):
-        saved = PipelineModel.load(f"{root}/pipeline/page{k}/model_pipeline")
+        # each step is saved once: the model pipeline holds only the
+        # fitted model, the prep pipeline every stage before it
+        tail = PipelineModel.load(f"{root}/pipeline/page{k}/model_pipeline")
         prep = PipelineModel.load(f"{root}/pipeline/page{k}/prep_pipeline")
-        assert [s.uid for s in saved.stages[: len(prep.stages)]] == [
-            s.uid for s in prep.stages
-        ]
+        assert uids(tail) == uids(model)[-1:]
+        assert isinstance(tail.stages[0], LogisticRegressionModel)
+        assert not set(uids(tail)) & set(uids(prep))
+        saved = loaded[k]
+        assert uids(saved) == uids(model) == uids(prep) + uids(tail)
         for m in (model, saved):
             assert any(isinstance(s, BinningModel) for s in m.stages)
 

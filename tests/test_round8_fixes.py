@@ -12,6 +12,7 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import Window
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 from flashml_spark.queries import QUERIES
 from tests.conftest import SF_DIR
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 
 def _rows(df, *cols):
