@@ -3,7 +3,10 @@
 
 PSI (population stability): decile buckets fit on the BASE score
 distribution (QuantileDiscretizer), applied to both base and new; bucket
-frequencies joined; SI = Σ (p_new - p_base)·ln(p_new/p_base)·100.
+counts full-outer-joined; SI = Σ (p_new - p_base)·ln(p_new/p_base)·100.
+Each side's fraction p is its bucket count over ALL of that side's rows;
+the sum runs over buckets populated on both sides (a one-sided bucket has
+no finite term and is reported separately, ``empty_psi_buckets``).
 VSI (variable stability): same formula over a categorical variable's value
 frequencies, plus missing/new value reporting via anti-joins.
 
@@ -31,9 +34,11 @@ def psi(
     ).fit(base)
     b = disc.transform(base).groupBy("__bucket").agg(F.count(F.lit(1)).alias("cnt_base"))
     n = disc.transform(new).groupBy("__bucket").agg(F.count(F.lit(1)).alias("cnt_new"))
-    # inner join — buckets empty on either side are excluded from the sum,
-    # mirroring the reference (which reports empty-bucket ranges separately)
-    joined = b.join(n, "__bucket")
+    # full join: each whole-frame sum skips the other side's nulls, so each
+    # side's fractions are over its own rows; a one-sided bucket's term is
+    # null and drops out of the sum (the reference reports empty-bucket
+    # ranges separately)
+    joined = b.join(n, "__bucket", "full")
     row = psi_from_bucket_counts(joined, "cnt_base", "cnt_new", out_col="psi").first()
     return row["psi"] if row and row["psi"] is not None else 0.0
 
@@ -61,10 +66,11 @@ def vsi(base: DataFrame, new: DataFrame, var_col: str,
     categorical — e.g. a user id — would otherwise materialize its whole
     domain on the driver).  ``missingTruncated``/``newTruncated`` flag when
     the cap was hit; the VSI sum itself is unaffected (computed
-    distributed, joined values only)."""
+    distributed over the values present on both sides, each side's shares
+    taken over all of its own rows)."""
     b = base.groupBy(var_col).agg(F.count(F.lit(1)).alias("cnt_base"))
     n = new.groupBy(var_col).agg(F.count(F.lit(1)).alias("cnt_new"))
-    joined = b.join(n, var_col)
+    joined = b.join(n, var_col, "full")  # as in ``psi``
     row = psi_from_bucket_counts(joined, "cnt_base", "cnt_new", out_col="vsi").first()
     cap = max_reported_values + 1  # fetch one extra to detect truncation
     missing = sorted(

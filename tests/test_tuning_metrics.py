@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.linalg import Vectors
@@ -10,7 +12,7 @@ from pyspark.sql import functions as F
 from flashml_spark.metrics.binary import auroc, best_fbeta_threshold, threshold_sweep
 from flashml_spark.metrics.hotlead import hotlead_simulation
 from flashml_spark.metrics.multiclass import confusion_matrix, multiclass_metrics
-from flashml_spark.metrics.stability import psi, vsi
+from flashml_spark.metrics.stability import empty_psi_buckets, psi, vsi
 from flashml_spark.tuning.cv import CrossValidatorWithFoldMetrics
 from flashml_spark.tuning.generators import ParamSpace, random_param_sets
 from flashml_spark.tuning.hyperband import HyperBand
@@ -123,6 +125,23 @@ def test_psi_shifted_positive(spark):
     base = spark.range(1000).select((F.rand(1)).alias("score"))
     new = spark.range(1000).select((F.rand(2) * 0.5).alias("score"))
     assert psi(base, new, "score") > 10.0
+
+
+def test_psi_each_side_over_its_own_rows(spark):
+    """The new population moves wholly into 5 of the base's 10 deciles, at
+    twice their base share.  Each side's shares are over its own rows, so
+    the 5 shared buckets each add (0.2 - 0.1)·ln(0.2/0.1)·100; the 5 empty
+    ones add nothing.  Renormalizing over the shared buckets only would
+    read 0 here."""
+    # base deciles split near 0.1·k - 0.001; new values sit mid-decile
+    base = spark.range(1000).select((F.col("id") / 1000.0).alias("score"))
+    new = spark.range(1000).select(
+        (F.lit(0.45) + F.col("id") % 5 / 10.0).alias("score")
+    )
+    assert psi(base, new, "score") == pytest.approx(
+        5 * (0.2 - 0.1) * math.log(0.2 / 0.1) * 100, abs=1e-6
+    )
+    assert empty_psi_buckets(base, new, "score") == [0, 1, 2, 3, 9]
 
 
 def test_vsi(spark):
