@@ -105,7 +105,7 @@ class ExperimentConfig:
     # experiment.cv.predictSavepoint (FlashMLConstants.scala:215): persist the
     # best param map's per-fold validation predictions for threshold tuning
     cv_predict_savepoint: bool = False
-    parallelism: int = 6
+    parallelism: int = 3  # FlashMLConstants.scala:290
     # HyperBand budget (reference defaults, HyperBand.scala:60-96)
     hyperband_max_iter: int = 81
     hyperband_eta: int = 3
@@ -293,9 +293,7 @@ class Experiment:
             # tuning block is never silently ignored.
             from flashml_spark.training.ovr import OneVsRestWithScores
 
-            est = OneVsRestWithScores(
-                classifier=est, labelCol=label_col, parallelism=c.parallelism
-            )
+            est = OneVsRestWithScores(classifier=est, labelCol=label_col)
         if c.tuning == "cv":
             from flashml_spark.tuning.cv import CrossValidatorWithFoldMetrics
 

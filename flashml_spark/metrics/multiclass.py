@@ -31,10 +31,15 @@ def multiclass_metrics(
     beta: float = 2.0,
 ) -> dict:
     """accuracy + weighted P/R/F1/F-beta/TPR/FPR + per-class table."""
-    # tiny; unordered, since the classes are sorted here
+    # tiny; unordered, since the classes are sorted in pair_metrics
     cm = _pair_counts(scored, label_col, prediction_col).collect()
-    classes = sorted({r["label"] for r in cm} | {r["pred"] for r in cm})
-    total = sum(r["n"] for r in cm)
+    return pair_metrics({(r["label"], r["pred"]): r["n"] for r in cm}, beta)
+
+
+def pair_metrics(by_pair: dict, beta: float = 2.0) -> dict:
+    """``multiclass_metrics`` from ``{(label, prediction): count}``."""
+    classes = sorted({l for l, _ in by_pair} | {p for _, p in by_pair})
+    total = sum(by_pair.values())
     if total == 0:
         # empty scored frame (e.g. an empty test page after page-level split
         # or a post-predict filter that removed all rows): zeroed metrics,
@@ -49,7 +54,6 @@ def multiclass_metrics(
             "weightedFalsePositiveRate": 0.0,
             "perClass": {},
         }
-    by_pair = {(r["label"], r["pred"]): r["n"] for r in cm}
 
     per_class = {}
     for c in classes:

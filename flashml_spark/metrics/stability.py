@@ -68,19 +68,17 @@ def vsi(base: DataFrame, new: DataFrame, var_col: str,
     the cap was hit; the VSI sum itself is unaffected (computed
     distributed over the values present on both sides, each side's shares
     taken over all of its own rows)."""
-    b = base.groupBy(var_col).agg(F.count(F.lit(1)).alias("cnt_base"))
-    n = new.groupBy(var_col).agg(F.count(F.lit(1)).alias("cnt_new"))
-    joined = b.join(n, var_col, "full")  # as in ``psi``
+    b = base.groupBy(F.col(var_col).alias("__vb")).agg(F.count(F.lit(1)).alias("cnt_base"))
+    n = new.groupBy(F.col(var_col).alias("__vn")).agg(F.count(F.lit(1)).alias("cnt_new"))
+    # full join as in ``psi``, null-safe so a NULL value adds a term like
+    # any other; the keys are named apart because ``vsi_for_variables``
+    # may pass the same frame as both sides
+    joined = b.join(n, F.col("__vb").eqNullSafe(F.col("__vn")), "full")
     row = psi_from_bucket_counts(joined, "cnt_base", "cnt_new", out_col="vsi").first()
     cap = max_reported_values + 1  # fetch one extra to detect truncation
-    missing = sorted(
-        r[var_col]
-        for r in b.select(var_col).subtract(n.select(var_col)).limit(cap).collect()
-    )
-    new_values = sorted(
-        r[var_col]
-        for r in n.select(var_col).subtract(b.select(var_col)).limit(cap).collect()
-    )
+    b_vals, n_vals = b.select(F.col("__vb").alias("v")), n.select(F.col("__vn").alias("v"))
+    missing = sorted(r["v"] for r in b_vals.subtract(n_vals).limit(cap).collect())
+    new_values = sorted(r["v"] for r in n_vals.subtract(b_vals).limit(cap).collect())
     return {
         "vsi": row["vsi"] if row and row["vsi"] is not None else 0.0,
         "missingValues": missing[:max_reported_values],

@@ -20,7 +20,8 @@ from flashml_spark.training.estimators import strip_training_summary, with_param
 
 class OneVsRestWithScores(OneVsRest):
     """``OneVsRest`` that the tuners can treat as one estimator, and whose
-    per-class models carry no training summary."""
+    per-class models carry no training summary.  The per-class fits run
+    one at a time, whatever ``parallelism`` says."""
 
     def with_params(
         self, params: dict, max_iter: int | None = None
@@ -34,7 +35,10 @@ class OneVsRestWithScores(OneVsRest):
         )
 
     def _fit(self, dataset) -> OneVsRestModel:
-        model = super()._fit(dataset)
+        # pyspark hands every per-class fit thread ONE shared
+        # java.util.Properties, so concurrent fits race on the SQL execution
+        # id kept in it; one thread fits the classes one after another
+        model = OneVsRest._fit(self.copy({self.parallelism: 1}), dataset)
         for m in model.models:
             strip_training_summary(m)
         return model

@@ -8,19 +8,29 @@ best picked by a configured metric (default weightedPrecision,
 
 DataFrame-native folds: a seeded ``rand`` fold id (no RDD ``MLUtils.kFold``)
 — one pass tags every row, each fold is a filter over the cached tagged
-frame.  Candidate fits run concurrently from a driver thread pool; each
-fit is an independent Spark job (reference ``parallelism`` semantics).
+frame.  A LinearSVC or binary LogisticRegression grid (alone or inside
+one-vs-rest) is scored by ``training.glm_batch``: every (param map, fold,
+class) model in one batched solve, a Spark pass per optimizer step, and
+the fold metrics from one counting pass.  Anything else — and any run
+that saves fold predictions — fits each (param map, fold) as an
+independent Spark model from a driver thread pool of ``parallelism``
+threads (the reference's semantics).  The refit of the best param map is
+always Spark's own fit.
 """
 
 from __future__ import annotations
 
+import logging
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
-from flashml_spark.metrics.multiclass import multiclass_metrics
+from flashml_spark.metrics.multiclass import multiclass_metrics, pair_metrics
+from flashml_spark.training import glm_batch
 from flashml_spark.training.estimators import fit
 from pyspark.sql import functions as F
+
+log = logging.getLogger("flashml_spark.tuning")
 
 # fold metric (Spark evaluator name) -> its multiclass_metrics key
 FOLD_METRICS = {
@@ -40,7 +50,7 @@ class CrossValidatorWithFoldMetrics:
         metric: str = "weightedPrecision",
         num_folds: int = 3,
         seed: int = 999,
-        parallelism: int = 6,
+        parallelism: int = 3,
         predict_savepoint_path: str | None = None,
         predict_savepoint_cols: list[str] | None = None,
     ):
@@ -85,6 +95,11 @@ class CrossValidatorWithFoldMetrics:
 
         scored_frames: dict[tuple[int, int], DataFrame] = {}
 
+        def fold_row(metrics, p_idx, fold):
+            row = {m: metrics[key] for m, key in FOLD_METRICS.items()}
+            row.update(param_index=p_idx, fold=fold)
+            return row
+
         def run(task):
             p_idx, fold = task
             train = tagged.filter(F.col("__fold") != fold).drop("__fold")
@@ -96,13 +111,20 @@ class CrossValidatorWithFoldMetrics:
                 # the transform, never the fit
                 scored_frames[(p_idx, fold)] = scored
             # one confusion-matrix collect gives all four metrics
-            metrics = multiclass_metrics(scored, self.label_col, "prediction")
-            row = {m: metrics[key] for m, key in FOLD_METRICS.items()}
-            row.update(param_index=p_idx, fold=fold)
-            return row
+            return fold_row(multiclass_metrics(scored, self.label_col, "prediction"), p_idx, fold)
 
-        with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
-            self.fold_metrics_ = list(pool.map(run, tasks))
+        counts = None
+        if self.predict_savepoint_path is not None:
+            log.info("tuning.cv: per-model fits: fold predictions are saved")
+        else:
+            counts = glm_batch.fold_pair_counts(
+                self.estimator, self.param_maps, tagged, self.num_folds, self.label_col
+            )
+        if counts is not None:
+            self.fold_metrics_ = [fold_row(pair_metrics(counts.get(t, {})), *t) for t in tasks]
+        else:
+            with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
+                self.fold_metrics_ = list(pool.map(run, tasks))
 
         self.avg_metrics_ = []
         for p_idx in range(len(self.param_maps)):

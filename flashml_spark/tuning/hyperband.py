@@ -59,7 +59,7 @@ class HyperBand:
         max_iterations_final_model: int = 1000,
         stratified: bool = False,
         seed: int = 999,
-        parallelism: int = 6,
+        parallelism: int = 3,
     ):
         self.estimator = estimator
         self.param_space = param_space

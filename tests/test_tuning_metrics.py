@@ -153,6 +153,18 @@ def test_vsi(spark):
     assert out["newTruncated"] is False and out["missingTruncated"] is False
 
 
+def test_vsi_counts_null_as_a_value(spark):
+    """NULL is one more category: base 1/2 "a" 1/2 NULL, new 5/6 "a" 1/6
+    NULL, so VSI = 100·[(5/6 - 1/2)·ln(5/3) + (1/6 - 1/2)·ln(1/3)]."""
+    base = spark.createDataFrame([("a",)] * 50 + [(None,)] * 50, "v string")
+    new = spark.createDataFrame([("a",)] * 50 + [(None,)] * 10, "v string")
+    out = vsi(base, new, "v")
+    expected = 100 * (math.log(5 / 3) / 3 + math.log(3) / 3)
+    assert out["vsi"] == pytest.approx(expected, abs=1e-5)  # 53.64793
+    assert out["missingValues"] == [] and out["newValues"] == []
+    assert vsi(base, base, "v")["vsi"] == 0.0
+
+
 def test_vsi_report_capped_for_high_cardinality(spark):
     """A variable mistakenly declared categorical (id-like) must not ship
     its whole domain to the driver: reports cap at max_reported_values with
